@@ -4,11 +4,14 @@ With Delta/Iceberg these are log-native operations (``MERGE INTO``,
 streaming checkpoints). This module provides the same semantics over the
 plain-parquet lakehouse:
 
-- :func:`upsert_table` — keyed merge. Partitioned tables use DYNAMIC
-  partition overwrite so only partitions containing touched keys are
-  rewritten (the scale path: a merge touching 1 day of a year-partitioned
-  100 TB table rewrites 1/365th of it). Unpartitioned tables fall back to a
-  full rewrite, flagged in the returned stats.
+- :func:`upsert_table` / :func:`delete_rows` — keyed merge and keyed
+  delete. Partitioned tables rewrite only the partitions holding touched
+  keys (the scale path: a merge touching 1 day of a year-partitioned
+  100 TB table rewrites 1/365th of it) through ``io._replace_partitions``,
+  which also removes partitions the rewrite left empty. Unpartitioned
+  tables are rewritten whole through ``io._replace_table``'s staged write
+  and rename swap, flagged in the returned stats. Neither writes a table
+  any other way.
 - :func:`incremental_append` — high-watermark ingestion: append only source
   rows newer than the stored watermark; watermark persisted in a JSON
   sidecar under the table path (the parquet-world stand-in for a streaming
@@ -27,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import Lakehouse, table_path
-from .io import read_path
+from .io import _replace_partitions, _replace_table, read_path
 
 
 def upsert_table(
@@ -44,64 +47,34 @@ def upsert_table(
     Partitioned path: compute affected partitions from ``updates``, rebuild
     only those (existing-minus-matched ∪ updates), write with dynamic
     partition overwrite — untouched partitions' files are never rewritten.
+
+    ``updates`` is evaluated by two Spark jobs: the affected-partition
+    collect (partitioned tables only) and the write. Persist it first if
+    its plan is expensive.
     """
     path = table_path(lakehouse, table_name)
     existing = read_path(spark, path, "parquet")
-    n_updates = updates.count()
-
     if partition_by:
         # affected partitions = partitions the updates land in PLUS the
         # partitions currently holding any matched key — a key whose
         # partition value changes must have its old row removed from the
         # old partition, or it would survive as a duplicate
-        update_parts = updates.select(partition_by).distinct()
-        old_parts = (
-            existing.join(updates.select(*keys), keys, "left_semi")
-            .select(partition_by)
+        old_parts = existing.join(updates.select(*keys), keys, "left_semi")
+        affected = [
+            r[0]
+            for r in updates.select(partition_by)
+            .union(old_parts.select(partition_by))
             .distinct()
-        )
-        affected = [r[0] for r in update_parts.union(old_parts).distinct().collect()]
-        existing_affected = existing.where(F.col(partition_by).isin(affected))
-        kept = existing_affected.join(updates.select(*keys), keys, "left_anti")
-        merged = kept.unionByName(updates.select(*existing.columns))
-        merged_parts = {r[0] for r in merged.select(partition_by).distinct().collect()}
-        (
-            merged.write.format("parquet")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_by)
-            .save(path)
-        )
-        # dynamic overwrite only replaces partitions it writes: a partition
-        # fully emptied by the merge (every row was a moved/matched key)
-        # must be removed explicitly or its stale file survives
-        import shutil
-
-        for val in set(affected) - merged_parts:
-            stale = urlparse(posixpath.join(path, f"{partition_by}={val}")).path
-            shutil.rmtree(stale, ignore_errors=True)
-        return {
-            "mode": "dynamic-partition",
-            "partitions_rewritten": len(affected),
-            "updates": n_updates,
-        }
-
-    # unpartitioned: full rewrite through a temp dir + atomic swap (can't
-    # overwrite a path while reading it)
-    import shutil
-    import uuid
-
+            .collect()
+        ]
+        existing = existing.where(F.col(partition_by).isin(affected))
     kept = existing.join(updates.select(*keys), keys, "left_anti")
     merged = kept.unionByName(updates.select(*existing.columns))
-    tmp = f"{path}__upsert_{uuid.uuid4().hex}"
-    merged.write.format("parquet").mode("overwrite").save(tmp)
-    parsed = urlparse(path)
-    old = parsed.path or path
-    back = f"{old}__old_{uuid.uuid4().hex}"
-    os.rename(old, back)
-    os.rename(urlparse(tmp).path or tmp, old)
-    shutil.rmtree(back, ignore_errors=True)
-    return {"mode": "full-rewrite", "updates": n_updates}
+    if partition_by:
+        _replace_partitions(spark, path, merged, partition_by, affected)
+        return {"mode": "dynamic-partition", "partitions_rewritten": len(affected)}
+    _replace_table(spark, path, merged, fmt="parquet")
+    return {"mode": "full-rewrite"}
 
 
 def delete_rows(
@@ -118,45 +91,27 @@ def delete_rows(
     Partitioned path mirrors :func:`upsert_table`: only partitions that
     contain targeted keys are rewritten (found via a semi-join — one pass),
     so deleting one user from a user-partitioned 100 TB table rewrites one
-    partition. Unpartitioned: anti-join + atomic-swap rewrite.
+    partition, and a partition left with no rows is removed. Unpartitioned:
+    anti-join + staged full rewrite.
     """
     path = table_path(lakehouse, table_name)
     existing = read_path(spark, path, "parquet")
-    if partition_by:
-        affected = [
-            r[0]
-            for r in existing.join(keys_df, keys, "left_semi")
-            .select(partition_by)
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            return {"mode": "dynamic-partition", "partitions_rewritten": 0}
+    if not partition_by:
+        _replace_table(spark, path, existing.join(keys_df, keys, "left_anti"), fmt="parquet")
+        return {"mode": "full-rewrite"}
+    affected = [
+        r[0]
+        for r in existing.join(keys_df, keys, "left_semi")
+        .select(partition_by)
+        .distinct()
+        .collect()
+    ]
+    if affected:
         kept = existing.where(F.col(partition_by).isin(affected)).join(
             keys_df, keys, "left_anti"
         )
-        (
-            kept.write.format("parquet")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_by)
-            .save(path)
-        )
-        return {"mode": "dynamic-partition", "partitions_rewritten": len(affected)}
-
-    import shutil
-    import uuid
-
-    kept = existing.join(keys_df, keys, "left_anti")
-    tmp = f"{path}__delete_{uuid.uuid4().hex}"
-    kept.write.format("parquet").mode("overwrite").save(tmp)
-    parsed = urlparse(path)
-    old = parsed.path or path
-    back = f"{old}__old_{uuid.uuid4().hex}"
-    os.rename(old, back)
-    os.rename(urlparse(tmp).path or tmp, old)
-    shutil.rmtree(back, ignore_errors=True)
-    return {"mode": "full-rewrite"}
+        _replace_partitions(spark, path, kept, partition_by, affected)
+    return {"mode": "dynamic-partition", "partitions_rewritten": len(affected)}
 
 
 def _watermark_path(lakehouse: Lakehouse, table_name: str) -> str:

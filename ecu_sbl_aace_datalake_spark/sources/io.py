@@ -17,6 +17,21 @@ Delta-only, common.py:448/531), else Parquet — same code path, the
 lakehouse layout and semantics are identical. All writes are overwrite-mode
 with schema overwrite, matching the reference.
 
+Replacing a table with a plan that reads that same table (compaction,
+clustering, Z-ordering, upsert, delete, streaming state merges) goes through
+one of two private helpers, the parquet path's stand-in for a Delta commit:
+
+- ``_replace_table`` writes the new table to one staging sibling
+  (``{path}__stage_<hex>``) and swaps it in by rename, so readers see the
+  old or the new table, never half of one. Local paths rename through
+  ``os``, remote URIs through the Hadoop FileSystem.
+- ``_replace_partitions`` rewrites only the partitions the new rows land in
+  (dynamic partition overwrite), then removes the partitions it was told
+  are affected but wrote no rows to.
+
+:func:`vacuum_orphans` collects the staging and backup dirs an interrupted
+swap leaves behind.
+
 Scale notes:
 - ``write_table(partition_by=...)`` controls physical layout → later reads
   get partition pruning for free (Catalyst PruneFileSourcePartitions).
@@ -30,8 +45,12 @@ Scale notes:
 
 from __future__ import annotations
 
+import math
+import os
 import posixpath
+import re
 import shutil
+import uuid
 from typing import Any
 from urllib.parse import urlparse
 
@@ -50,6 +69,99 @@ except Exception:  # pragma: no cover - environment dependent
 DEFAULT_FORMAT = "delta" if _HAS_DELTA else "parquet"
 
 
+# Sibling-dir markers of a table replacement: the staged new table, and the
+# old table between the two renames of the swap. Earlier versions staged
+# under one marker per operation; vacuum_orphans still collects those.
+_STAGE, _BACKUP = "__stage_", "__old_"
+_ORPHAN_MARKERS = (
+    _STAGE, _BACKUP, "__compact_", "__cluster_", "__zorder_", "__upsert_", "__delete_"
+)
+
+
+def _as_list(cols: str | list[str]) -> list[str]:
+    return [cols] if isinstance(cols, str) else list(cols)
+
+
+def _local_path(path: str) -> str | None:
+    """Driver-local filesystem path of ``path``; None for a remote URI."""
+    parsed = urlparse(path)
+    return (parsed.path or path) if parsed.scheme in ("", "file") else None
+
+
+def _hadoop(spark: SparkSession, path: str) -> tuple[Any, Any]:
+    """(Hadoop FileSystem, Hadoop Path) for any storage URI."""
+    hp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hp.getFileSystem(spark._jsc.hadoopConfiguration()), hp
+
+
+def _remove(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path``; a missing path is not an error."""
+    local = _local_path(path)
+    if local is not None:
+        shutil.rmtree(local, ignore_errors=True)
+    else:
+        fs, hp = _hadoop(spark, path)
+        fs.delete(hp, True)
+
+
+def _replace_table(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    partition_by: str | list[str] | None = None,
+    fmt: str = DEFAULT_FORMAT,
+) -> None:
+    """Replace the table at ``path`` with ``df``, which may read that same
+    table: write ``df`` to a staging sibling, then swap it in by rename
+    (readers mid-swap see old or new, never half)."""
+    stage = f"{path}{_STAGE}{uuid.uuid4().hex}"
+    back = f"{path}{_BACKUP}{uuid.uuid4().hex}"
+    writer = df.write.format(fmt).mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*_as_list(partition_by))
+    writer.save(stage)
+    local = _local_path(path)
+    if local is not None:
+        os.rename(local, _local_path(back))
+        os.rename(_local_path(stage), local)
+    else:
+        # Hadoop FS reports a failed rename by returning False, not raising;
+        # renaming the stage onto a path that still exists would nest it
+        fs, hp = _hadoop(spark, path)
+        Path = spark._jvm.org.apache.hadoop.fs.Path
+        if not (fs.rename(hp, Path(back)) and fs.rename(Path(stage), hp)):
+            raise OSError(f"could not swap {stage} into {path}")
+    _remove(spark, back)
+
+
+def _replace_partitions(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    partition_by: str,
+    affected: list[Any],
+) -> None:
+    """Overwrite only the partitions ``df`` has rows in (parquet dynamic
+    partition overwrite; ``df`` may read the table), then remove every partition in
+    ``affected`` the write left empty: dynamic overwrite never touches a
+    partition it writes no rows to, so that partition's old files would
+    survive. The written partition values come from an observed metric of
+    the write itself, not from a second pass over ``df``."""
+    from pyspark.sql import Observation
+
+    written = Observation()
+    (
+        df.observe(written, F.collect_set(partition_by).alias("parts"))
+        .write.format("parquet")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_by)
+        .save(path)
+    )
+    for val in set(affected) - set(written.get["parts"]):
+        _remove(spark, posixpath.join(path, f"{partition_by}={val}"))
+
+
 def read_path(spark: SparkSession, path: str, fmt: str = DEFAULT_FORMAT) -> DataFrame:
     """Load a table by physical path (reference common.py:448)."""
     return spark.read.format(fmt).load(path)
@@ -59,9 +171,7 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop FileSystem API — correct for ANY
     storage URI (abfss/s3/hdfs/file). ``os.path`` checks only see the
     driver-local filesystem and silently return False for remote tables."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hp = _hadoop(spark, path)
     return bool(fs.exists(hp))
 
 
@@ -151,8 +261,7 @@ def write_table(
     if fmt == "delta":
         writer = writer.option("overwriteSchema", "true")
     if partition_by:
-        cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        writer = writer.partitionBy(*cols)
+        writer = writer.partitionBy(*_as_list(partition_by))
     writer.save(path)
 
     info: dict[str, Any] = {
@@ -194,39 +303,23 @@ def drop_table(spark: SparkSession, lakehouse: Lakehouse, table_name: str, fmt: 
     For local paths the directory is removed; for remote URIs the Hadoop
     FileSystem API is used via the JVM gateway.
     """
-    path = table_path(lakehouse, table_name)
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
-        shutil.rmtree(parsed.path or path, ignore_errors=True)
-        return
-    jvm = spark._jvm  # remote object stores: delete via Hadoop FS
-    jsc = spark._jsc
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(jsc.hadoopConfiguration())
-    fs.delete(hadoop_path, True)
+    _remove(spark, table_path(lakehouse, table_name))
 
 
 def list_tables(spark: SparkSession, lakehouse: Lakehouse) -> list[str]:
     """Enumerate table names under the Tables/ root (reference ``getTables``
     common.py:497-503 globbed a locally-mounted dir; here: Hadoop FS listing,
     which works for any URI scheme without mounting)."""
-    import os
-
     root = lakehouse.tables_path
-    parsed = urlparse(root)
-    if parsed.scheme in ("", "file"):
-        p = parsed.path or root
+    p = _local_path(root)
+    if p is not None:
         if not os.path.isdir(p):
             return []
         return sorted(d for d in os.listdir(p) if os.path.isdir(os.path.join(p, d)))
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hadoop_path):
+    fs, hp = _hadoop(spark, root)
+    if not fs.exists(hp):
         return []
-    return sorted(
-        st.getPath().getName() for st in fs.listStatus(hadoop_path) if st.isDirectory()
-    )
+    return sorted(st.getPath().getName() for st in fs.listStatus(hp) if st.isDirectory())
 
 
 def write_bucketed_table(
@@ -249,7 +342,7 @@ def write_bucketed_table(
     ``n_buckets`` so each bucket file lands near your target file size at
     full scale (e.g. 100 TB / 128 MB ≈ 800k → bucket by thousands, not 32).
     """
-    bcols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
+    bcols = _as_list(bucket_cols)
     # idempotence: DROP an existing registration, then clear any ORPHANED
     # managed-table location (a table dir left by another session's
     # metastore makes saveAsTable fail with LOCATION_ALREADY_EXISTS even
@@ -258,9 +351,7 @@ def write_bucketed_table(
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     orphan = f"{warehouse.rstrip('/')}/{table_name.lower()}"
     if path_exists(spark, orphan):
-        jvm = spark._jvm
-        hp = jvm.org.apache.hadoop.fs.Path(orphan)
-        hp.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hp, True)
+        _remove(spark, orphan)
     # One file per bucket: repartition on the bucket key into exactly
     # n_buckets partitions BEFORE the bucketed write. repartition and
     # bucketBy share the same Murmur3 pmod placement, so each write task
@@ -273,8 +364,7 @@ def write_bucketed_table(
         .write.format(fmt).mode("overwrite").bucketBy(n_buckets, *bcols)
     )
     if sort_cols:
-        scols = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        writer = writer.sortBy(*scols)
+        writer = writer.sortBy(*_as_list(sort_cols))
     writer.saveAsTable(table_name)
 
 
@@ -307,21 +397,17 @@ def read_table_merged(
 
 def table_file_stats(spark: SparkSession, lakehouse: Lakehouse, table_name: str) -> dict[str, Any]:
     """(n_files, total_bytes) under a table path — the compaction signal."""
-    import os
-
     root = table_path(lakehouse, table_name)
-    parsed = urlparse(root)
+    local = _local_path(root)
     n, size = 0, 0
-    if parsed.scheme in ("", "file"):
-        for dirpath, _dirs, files in os.walk(parsed.path or root):
+    if local is not None:
+        for dirpath, _dirs, files in os.walk(local):
             for f in files:
                 if not f.startswith(("_", ".")):
                     n += 1
                     size += os.path.getsize(os.path.join(dirpath, f))
         return {"n_files": n, "total_bytes": size}
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hp = _hadoop(spark, root)
     it = fs.listFiles(hp, True)
     while it.hasNext():
         st = it.next()
@@ -346,69 +432,29 @@ def compact_table(
     Small files are the classic lakehouse death-by-a-thousand-cuts at scale:
     each file costs a task + a footer read + a metadata entry. Streaming and
     frequent appends produce them; periodic compaction restores scan
-    efficiency. Parquet path: write compacted data to a sibling tmp dir and
-    atomically swap (readers mid-swap see old or new, never half). Delta
-    would instead rewrite transactionally via its log.
+    efficiency. Parquet path: the compacted table replaces the old one
+    through ``_replace_table``'s staged write and rename swap. Delta would
+    instead rewrite transactionally via its log.
 
     Returns before/after file stats.
     """
-    import math
-    import os
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
     before = table_file_stats(spark, lakehouse, table_name)
     path = table_path(lakehouse, table_name)
     n_out = max(1, math.ceil(before["total_bytes"] / (target_file_mb * 1024 * 1024)))
     df = read_path(spark, path, fmt)
-    tmp = f"{path}__compact_{uuid.uuid4().hex}"
     if partition_by:
         # partitioned table: preserve the layout — repartition on the
         # partition columns (one output file per partition value) and write
         # partitionBy, otherwise compaction would silently flatten the
         # table and break partition pruning
-        pcols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        writer = (
-            df.repartition(*[F.col(c) for c in pcols])
-            .write.format(fmt)
-            .mode("overwrite")
-            .partitionBy(*pcols)
-        )
-        writer.save(tmp)
+        out = df.repartition(*[F.col(c) for c in _as_list(partition_by)])
     else:
         # coalesce (no shuffle) is enough to merge files; repartition would
         # add an exchange only to re-split — unnecessary for pure compaction
-        df.coalesce(n_out).write.format(fmt).mode("overwrite").save(tmp)
-    _atomic_swap(spark, path, tmp)
+        out = df.coalesce(n_out)
+    _replace_table(spark, path, out, partition_by, fmt)
     after = table_file_stats(spark, lakehouse, table_name)
     return {"before": before, "after": after, "target_files": n_out}
-
-
-def _atomic_swap(spark: SparkSession, path: str, tmp: str) -> None:
-    """Replace the table dir at ``path`` with ``tmp`` via rename — readers
-    mid-swap see old or new, never half."""
-    import os
-    import shutil
-    import uuid
-
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
-        old, new = parsed.path or path, urlparse(tmp).path or tmp
-        back = f"{old}__old_{uuid.uuid4().hex}"
-        os.rename(old, back)
-        os.rename(new, old)
-        shutil.rmtree(back, ignore_errors=True)
-    else:
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        back = jvm.org.apache.hadoop.fs.Path(f"{path}__old_{uuid.uuid4().hex}")
-        fs.rename(jvm.org.apache.hadoop.fs.Path(path), back)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), jvm.org.apache.hadoop.fs.Path(path))
-        fs.delete(back, True)
 
 
 def cluster_table(
@@ -433,17 +479,13 @@ def cluster_table(
     The range partitioner samples the key distribution, so skewed keys
     still produce balanced files. Returns before/after stats.
     """
-    cols = [by] if isinstance(by, str) else list(by)
+    cols = _as_list(by)
     before = table_file_stats(spark, lakehouse, table_name)
     path = table_path(lakehouse, table_name)
     df = read_path(spark, path, fmt)
     n_out = n_files or max(1, before["n_files"])
     out = df.repartitionByRange(n_out, *cols).sortWithinPartitions(*cols)
-    import uuid
-
-    tmp = f"{path}__cluster_{uuid.uuid4().hex}"
-    out.write.format(fmt).mode("overwrite").save(tmp)
-    _atomic_swap(spark, path, tmp)
+    _replace_table(spark, path, out, fmt=fmt)
     after = table_file_stats(spark, lakehouse, table_name)
     return {"before": before, "after": after, "clustered_by": cols, "files": n_out}
 
@@ -472,8 +514,6 @@ def zorder_table(
     code is a pure shift/mask expression (functions/zorder.py), so the
     sort stays in whole-stage codegen.
     """
-    from pyspark.sql import functions as F
-
     from ..functions.zorder import zvalue
 
     before = table_file_stats(spark, lakehouse, table_name)
@@ -487,11 +527,7 @@ def zorder_table(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    import uuid
-
-    tmp = f"{path}__zorder_{uuid.uuid4().hex}"
-    out.write.format(fmt).mode("overwrite").save(tmp)
-    _atomic_swap(spark, path, tmp)
+    _replace_table(spark, path, out, fmt=fmt)
     after = table_file_stats(spark, lakehouse, table_name)
     return {"before": before, "after": after, "zordered_by": list(by), "files": n_out}
 
@@ -500,8 +536,6 @@ def ns_to_timestamp(df: DataFrame, *cols: str) -> DataFrame:
     """Convert long nanosecond-epoch columns (parquet TIMESTAMP(NANOS) read
     under ``spark.sql.legacy.parquet.nanosAsLong``) to timestamps, truncating
     to microseconds exactly as DuckDB does when reading the same files."""
-    from pyspark.sql import functions as F
-
     for c in cols:
         if c in df.columns and dict(df.dtypes)[c] == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
@@ -626,21 +660,17 @@ def export_files(
 
 
 def vacuum_orphans(lakehouse: Lakehouse, dry_run: bool = False) -> list[str]:
-    """Remove orphaned rewrite artifacts under ``Tables/``: the
-    ``__compact_*`` / ``__cluster_*`` staging dirs and ``__old_*`` backups
-    that an interrupted :func:`compact_table`/:func:`cluster_table` can
+    """Remove orphaned rewrite artifacts under ``Tables/``: the staging
+    dirs and ``__old_*`` backups that an interrupted table replacement
+    (compaction, clustering, Z-ordering, upsert, delete, state merge) can
     leave behind (the swap itself is atomic; the cleanup after it isn't).
 
     The VACUUM of this engine's parquet path (Delta has its own). Matches
     ONLY the engine's own suffix conventions — never user tables. Returns
     the removed (or, with ``dry_run``, would-be-removed) paths.
     """
-    import os
-    import re
-    import shutil
-
-    pat = re.compile(r"__(compact|cluster|old)_[0-9a-f]{32}$")
-    root = urlparse(lakehouse.tables_path).path or lakehouse.tables_path
+    pat = re.compile(f"({'|'.join(_ORPHAN_MARKERS)})[0-9a-f]{{32}}$")
+    root = _local_path(lakehouse.tables_path) or lakehouse.tables_path
     removed: list[str] = []
     if not os.path.isdir(root):
         return removed
@@ -710,8 +740,9 @@ def read_pruned(
             keep = keep & (F.col(f"{c}_max").isNull() | (F.col(f"{c}_max") >= F.lit(lo)))
         if hi is not None:
             keep = keep & (F.col(f"{c}_min").isNull() | (F.col(f"{c}_min") <= F.lit(hi)))
-    files = [r.file for r in zmap.where(keep).select("file").collect()]
-    total = zmap.count()
+    # one pass over the map: both counts come from the same collected list
+    marked = zmap.select("file", keep.alias("keep")).collect()
+    files = [f for f, k in marked if k]
     df = spark.read.format(fmt).load(files) if files else read_path(
         spark, table_path(lakehouse, table_name), fmt
     ).limit(0)
@@ -720,4 +751,4 @@ def read_pruned(
             df = df.where(F.col(c) >= F.lit(lo))
         if hi is not None:
             df = df.where(F.col(c) <= F.lit(hi))
-    return df, {"files_total": total, "files_read": len(files)}
+    return df, {"files_total": len(marked), "files_read": len(files)}

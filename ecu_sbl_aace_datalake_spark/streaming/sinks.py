@@ -139,10 +139,7 @@ def foreach_batch_agg_state(
     Replay safety: foreachBatch replays WHOLE batches after a failure, and
     a replayed merge would double-count — so the state table carries the
     id of the last merged batch (``__last_batch``, constant column) and
-    ``process`` SKIPS any batch_id it has already absorbed. The remaining
-    exposure is a crash inside write_table's overwrite itself (swap
-    non-atomicity), the same window every foreachBatch parquet sink has —
-    not silent double counting."""
+    ``process`` SKIPS any batch_id it has already absorbed."""
     def process(batch_df: DataFrame, batch_id: int) -> None:
         merge_batch_into_state(
             lakehouse, table_name, keys, value_col, batch_df, batch_id,
@@ -170,24 +167,23 @@ def merge_batch_into_state(
     direct testing and batch-job reuse). Returns False when the batch was
     skipped as a replay."""
     from ..operators import aggstate
-    from ..sources.io import read_table, table_exists, write_table
+    from ..sources.catalog import table_path
+    from ..sources.io import _replace_table, read_table, table_exists, write_table
 
     if batch_df.isEmpty():
         return False
     spark = batch_df.sparkSession
     batch_state = aggstate.agg_state(batch_df, keys, value_col, with_hll)
-    if table_exists(spark, lakehouse, table_name):
-        existing = read_table(spark, lakehouse, table_name)
-        last = existing.agg(F.max("__last_batch")).first()[0]
-        if last is not None and batch_id <= last:
-            return False  # replayed batch: already merged, keep idempotent
-        merged = aggstate.merge_agg_states(
-            existing.drop("__last_batch"), batch_state, keys
-        ).localCheckpoint()
-    else:
-        merged = batch_state
-    write_table(
-        lakehouse, table_name,
+    if not table_exists(spark, lakehouse, table_name):
+        write_table(lakehouse, table_name, batch_state.withColumn("__last_batch", F.lit(batch_id)))
+        return True
+    existing = read_table(spark, lakehouse, table_name)
+    last = existing.agg(F.max("__last_batch")).first()[0]
+    if last is not None and batch_id <= last:
+        return False  # replayed batch: already merged, keep idempotent
+    merged = aggstate.merge_agg_states(existing.drop("__last_batch"), batch_state, keys)
+    _replace_table(
+        spark, table_path(lakehouse, table_name),
         merged.withColumn("__last_batch", F.lit(batch_id)),
     )
     return True
@@ -417,30 +413,28 @@ def foreach_batch_cdc_apply(
     and a change ranks above the base row it produced only by being the
     same change (equal outcome)."""
     from ..operators.star import apply_changelog
-    from ..sources.io import read_path, table_exists, write_table
+    from ..sources.catalog import table_path
+    from ..sources.io import _replace_table, path_exists, read_path, write_table
 
     meta_cols = [ts_col, op_col] + ([seq_col] if seq_col else [])
+    path = table_path(lakehouse, table_name)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        exists = table_exists(spark, lakehouse, table_name)
-        if exists:
-            snap = read_path(
-                spark, f"{lakehouse.tables_path}/{table_name}", "parquet"
-            )
-        else:
-            # bootstrap: empty snapshot with the data columns only
-            snap = batch_df.drop(*meta_cols).limit(0)
+        exists = path_exists(spark, path)
+        # bootstrap: empty snapshot with the data columns only
+        snap = read_path(spark, path, "parquet") if exists else batch_df.drop(*meta_cols).limit(0)
         new_snap = apply_changelog(
             snap, batch_df, keys, ts_col=ts_col, op_col=op_col,
             seq_col=seq_col,
         )
-        # materialize BEFORE overwrite: new_snap reads the table it replaces
         spark.sparkContext.setJobDescription(f"cdc_apply batch {batch_id}")
-        staged = new_snap.localCheckpoint(eager=True)
-        write_table(lakehouse, table_name, staged, partition_by=partition_by)
+        if exists:  # new_snap reads the table it replaces
+            _replace_table(spark, path, new_snap, partition_by)
+        else:
+            write_table(lakehouse, table_name, new_snap, partition_by=partition_by)
 
     return (
         stream.writeStream.foreachBatch(process)

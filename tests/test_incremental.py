@@ -181,6 +181,44 @@ class TestPartitionKeyChange:
         rows = {(r.id, r.part, r.v) for r in back.collect()}
         assert rows == {(1, "B", 9.0), (2, "B", 2.0)}, rows
 
+    def test_delete_emptying_a_partition_removes_it(self, spark):
+        import tempfile
+
+        from ecu_sbl_aace_datalake_spark.sources.incremental import delete_rows
+
+        lh = Lakehouse("del4", tempfile.mkdtemp())
+        df = spark.createDataFrame([(1, "A"), (2, "B")], "id long, part string")
+        write_table(lh, "t", df, partition_by="part")
+        # delete the ONLY row of partition A
+        victims = spark.createDataFrame([(1,)], "id long")
+        stats = delete_rows(spark, lh, "t", victims, keys=["id"], partition_by="part")
+        assert stats["partitions_rewritten"] == 1
+        back = read_path(spark, f"{lh.tables_path}/t", "parquet")
+        rows = {(r.id, r.part) for r in back.collect()}
+        assert rows == {(2, "B")}, rows
+
+
+    def test_rewrites_through_hadoop_fs(self, spark, monkeypatch):
+        """The swap and the stale-partition removal also work through the
+        Hadoop FileSystem, the path every remote URI (abfss/s3) takes."""
+        import tempfile
+
+        from ecu_sbl_aace_datalake_spark.sources import io
+        from ecu_sbl_aace_datalake_spark.sources.incremental import delete_rows
+
+        monkeypatch.setattr(io, "_local_path", lambda path: None)
+        lh = Lakehouse("hfs", tempfile.mkdtemp())
+        df = spark.createDataFrame([(1, "A"), (2, "B")], "id long, part string")
+        write_table(lh, "flat", df)
+        write_table(lh, "parts", df, partition_by="part")
+        upsert_table(spark, lh, "flat", spark.createDataFrame([(1, "Z")], df.schema), keys=["id"])
+        victims = spark.createDataFrame([(1,)], "id long")
+        delete_rows(spark, lh, "parts", victims, keys=["id"], partition_by="part")
+        flat = read_path(spark, f"{lh.tables_path}/flat", "parquet")
+        parts = read_path(spark, f"{lh.tables_path}/parts", "parquet")
+        assert {tuple(r) for r in flat.collect()} == {(1, "Z"), (2, "B")}
+        assert {(r.id, r.part) for r in parts.collect()} == {(2, "B")}
+        assert io.list_tables(spark, lh) == ["flat", "parts"]  # no staging or backup left
 
 class TestPartitionedCompaction:
     def test_compaction_preserves_partition_layout(self, spark, sf_dir):

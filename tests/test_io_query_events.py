@@ -401,6 +401,29 @@ class TestVacuumOrphans:
         assert len(removed) == 3
         assert sorted(os.listdir(lh.tables_path)) == ["nation"]
 
+    def test_removes_what_interrupted_rewrites_leave(self, spark, sf_dir, tmp_path, monkeypatch):
+        """A rewrite that dies before its swap leaves its staging dir; so
+        may a Z-order rewrite of an earlier version (``__zorder_``)."""
+        import os
+
+        lh = Lakehouse("v", str(tmp_path))
+        lio.write_table(lh, "nation", lio.load_table(spark, sf_dir, "nation"))
+
+        def crash(*_args):
+            raise OSError("interrupted before the swap")
+
+        monkeypatch.setattr(os, "rename", crash)
+        with pytest.raises(OSError, match="interrupted"):
+            lio.compact_table(spark, lh, "nation")
+        monkeypatch.undo()
+        os.makedirs(os.path.join(lh.tables_path, f"nation__zorder_{'b' * 32}"))
+        left = sorted(d for d in os.listdir(lh.tables_path) if d != "nation")
+        assert len(left) == 2
+        removed = lio.vacuum_orphans(lh)
+        assert sorted(os.path.basename(p) for p in removed) == left
+        assert sorted(os.listdir(lh.tables_path)) == ["nation"]
+        assert lio.read_path(spark, f"{lh.tables_path}/nation", "parquet").count() == 25
+
     def test_noop_on_missing_root(self, tmp_path):
         lh = Lakehouse("v", str(tmp_path / "nowhere"))
         assert lio.vacuum_orphans(lh) == []
