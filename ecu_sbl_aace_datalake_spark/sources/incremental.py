@@ -6,12 +6,15 @@ plain-parquet lakehouse:
 
 - :func:`upsert_table` / :func:`delete_rows` — keyed merge and keyed
   delete. Partitioned tables rewrite only the partitions holding touched
-  keys (the scale path: a merge touching 1 day of a year-partitioned
-  100 TB table rewrites 1/365th of it) through ``io._replace_partitions``,
-  which also removes partitions the rewrite left empty. Unpartitioned
-  tables are rewritten whole through ``io._replace_table``'s staged write
-  and rename swap, flagged in the returned stats. Neither writes a table
-  any other way.
+  keys (a merge touching 1 day of a year-partitioned table rewrites
+  1/365th of it) through ``io._replace_partitions``, which writes each
+  rewritten partition as one data file, the layout ``io.compact_table``
+  keeps, so a compaction after an upsert or delete finds nothing to
+  rewrite. The price is write parallelism: one task writes each rewritten
+  partition, whatever its size. It also removes partitions the rewrite
+  left empty. Unpartitioned tables are rewritten whole through
+  ``io._replace_table``'s staged write and rename swap, flagged in the
+  returned stats. Neither writes a table any other way.
 - :func:`incremental_append` — high-watermark ingestion: append only source
   rows newer than the stored watermark; watermark persisted in a JSON
   sidecar under the table path (the parquet-world stand-in for a streaming
@@ -47,6 +50,8 @@ def upsert_table(
     Partitioned path: compute affected partitions from ``updates``, rebuild
     only those (existing-minus-matched ∪ updates), write with dynamic
     partition overwrite — untouched partitions' files are never rewritten.
+    Each rewritten partition is written as one file by one task, so the
+    largest touched partition bounds the write time.
 
     ``updates`` is evaluated by two Spark jobs: the affected-partition
     collect (partitioned tables only) and the write. Persist it first if
@@ -90,8 +95,9 @@ def delete_rows(
 
     Partitioned path mirrors :func:`upsert_table`: only partitions that
     contain targeted keys are rewritten (found via a semi-join — one pass),
-    so deleting one user from a user-partitioned 100 TB table rewrites one
-    partition, and a partition left with no rows is removed. Unpartitioned:
+    so deleting one user from a user-partitioned table rewrites one
+    partition, and a partition left with no rows is removed. As there, one
+    task writes each rewritten partition as one file. Unpartitioned:
     anti-join + staged full rewrite.
     """
     path = table_path(lakehouse, table_name)

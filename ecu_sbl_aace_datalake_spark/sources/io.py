@@ -26,8 +26,10 @@ one of two private helpers, the parquet path's stand-in for a Delta commit:
   old or the new table, never half of one. Local paths rename through
   ``os``, remote URIs through the Hadoop FileSystem.
 - ``_replace_partitions`` rewrites only the partitions the new rows land in
-  (dynamic partition overwrite), then removes the partitions it was told
-  are affected but wrote no rows to.
+  (dynamic partition overwrite), one data file per partition, then removes
+  the partitions it was told are affected but wrote no rows to. One file
+  per partition is the layout :func:`compact_table` keeps, so upserts and
+  deletes leave nothing for it to do.
 
 :func:`vacuum_orphans` collects the staging and backup dirs an interrupted
 swap leaves behind.
@@ -51,6 +53,8 @@ import posixpath
 import re
 import shutil
 import uuid
+from collections import Counter
+from collections.abc import Iterator
 from typing import Any
 from urllib.parse import urlparse
 
@@ -138,28 +142,35 @@ def _replace_partitions(
     spark: SparkSession,
     path: str,
     df: DataFrame,
-    partition_by: str,
+    partition_by: str | list[str],
     affected: list[Any],
 ) -> None:
     """Overwrite only the partitions ``df`` has rows in (parquet dynamic
-    partition overwrite; ``df`` may read the table), then remove every partition in
-    ``affected`` the write left empty: dynamic overwrite never touches a
-    partition it writes no rows to, so that partition's old files would
-    survive. The written partition values come from an observed metric of
-    the write itself, not from a second pass over ``df``."""
+    partition overwrite; ``df`` may read the table), each with exactly one
+    data file: the shuffle on the partition columns puts every partition's
+    rows in one write task, so one task writes all of a partition however
+    large it is. Then remove every partition in ``affected`` the write left
+    empty: dynamic overwrite never touches a partition it writes no rows
+    to, so that partition's old files would survive. ``affected`` holds
+    values of a single partition column; a caller partitioning on several
+    passes none. The written partition values come from an observed metric
+    of the write itself, not from a second pass over ``df``."""
     from pyspark.sql import Observation
 
+    cols = _as_list(partition_by)
+    assert not affected or len(cols) == 1, "affected takes one partition column"
     written = Observation()
     (
-        df.observe(written, F.collect_set(partition_by).alias("parts"))
+        df.repartition(*[F.col(c) for c in cols])
+        .observe(written, F.collect_set(cols[0]).alias("parts"))
         .write.format("parquet")
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_by)
+        .partitionBy(*cols)
         .save(path)
     )
     for val in set(affected) - set(written.get["parts"]):
-        _remove(spark, posixpath.join(path, f"{partition_by}={val}"))
+        _remove(spark, posixpath.join(path, f"{cols[0]}={val}"))
 
 
 def read_path(spark: SparkSession, path: str, fmt: str = DEFAULT_FORMAT) -> DataFrame:
@@ -395,27 +406,42 @@ def read_table_merged(
     return reader.load(table_path(lakehouse, table_name))
 
 
-def table_file_stats(spark: SparkSession, lakehouse: Lakehouse, table_name: str) -> dict[str, Any]:
-    """(n_files, total_bytes) under a table path — the compaction signal."""
-    root = table_path(lakehouse, table_name)
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips: ``_SUCCESS``, ``.crc`` files,
+    ``_temporary`` and ``.spark-staging-*`` dirs (``_x=1`` is a partition)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_files(spark: SparkSession, root: str) -> Iterator[tuple[str, int]]:
+    """(path relative to ``root``, size) of every data file under ``root``,
+    as a read of it sees them: no file or dir below ``root`` with a hidden
+    name."""
     local = _local_path(root)
-    n, size = 0, 0
     if local is not None:
-        for dirpath, _dirs, files in os.walk(local):
+        for dirpath, dirs, files in os.walk(local):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
             for f in files:
-                if not f.startswith(("_", ".")):
-                    n += 1
-                    size += os.path.getsize(os.path.join(dirpath, f))
-        return {"n_files": n, "total_bytes": size}
+                if not _hidden(f):
+                    full = os.path.join(dirpath, f)
+                    yield os.path.relpath(full, local), os.path.getsize(full)
+        return
     fs, hp = _hadoop(spark, root)
+    prefix = fs.makeQualified(hp).toString().rstrip("/") + "/"
     it = fs.listFiles(hp, True)
     while it.hasNext():
         st = it.next()
-        name = st.getPath().getName()
-        if not (name.startswith("_") or name.startswith(".")):
-            n += 1
-            size += st.getLen()
-    return {"n_files": n, "total_bytes": size}
+        rel = st.getPath().toString()[len(prefix):]
+        if not any(_hidden(part) for part in rel.split("/")):
+            yield rel, st.getLen()
+
+
+def _file_stats(files: list[tuple[str, int]]) -> dict[str, Any]:
+    return {"n_files": len(files), "total_bytes": sum(size for _p, size in files)}
+
+
+def table_file_stats(spark: SparkSession, lakehouse: Lakehouse, table_name: str) -> dict[str, Any]:
+    """(n_files, total_bytes) under a table path — the compaction signal."""
+    return _file_stats(list(_data_files(spark, table_path(lakehouse, table_name))))
 
 
 def compact_table(
@@ -426,33 +452,67 @@ def compact_table(
     fmt: str = DEFAULT_FORMAT,
     partition_by: str | list[str] | None = None,
 ) -> dict[str, Any]:
-    """Small-file compaction (the OPTIMIZE of this engine): rewrite the
-    table into ``ceil(total_bytes / target)`` files.
+    """Small-file compaction (the OPTIMIZE of this engine).
 
     Small files are the classic lakehouse death-by-a-thousand-cuts at scale:
     each file costs a task + a footer read + a metadata entry. Streaming and
     frequent appends produce them; periodic compaction restores scan
-    efficiency. Parquet path: the compacted table replaces the old one
-    through ``_replace_table``'s staged write and rename swap. Delta would
-    instead rewrite transactionally via its log.
+    efficiency.
+
+    - Partitioned parquet (``partition_by`` with ``fmt="parquet"``): a
+      partition is fragmented when it holds more data files than
+      ``ceil(partition bytes / target)``, i.e. more than one for any
+      partition below the target size. Only fragmented partitions are read
+      and rewritten, in place and one file each, through
+      ``_replace_partitions``, the layout every partitioned upsert and
+      delete already writes. Every other partition keeps its files under
+      the same paths, and on an already compact table the call costs one
+      file listing and writes nothing.
+    - Any other table is rewritten whole in ``fmt`` and replaces the old
+      one through ``_replace_table``'s staged write and rename swap: one
+      file per partition when partitioned, else ``ceil(total_bytes /
+      target)`` files. A Delta table's log names its live files, so
+      rewriting some of its files behind the log would bring back removed
+      rows and drop files the log still lists.
 
     Returns before/after file stats.
     """
-    before = table_file_stats(spark, lakehouse, table_name)
     path = table_path(lakehouse, table_name)
-    n_out = max(1, math.ceil(before["total_bytes"] / (target_file_mb * 1024 * 1024)))
-    df = read_path(spark, path, fmt)
-    if partition_by:
-        # partitioned table: preserve the layout — repartition on the
-        # partition columns (one output file per partition value) and write
-        # partitionBy, otherwise compaction would silently flatten the
-        # table and break partition pruning
-        out = df.repartition(*[F.col(c) for c in _as_list(partition_by)])
+    files = list(_data_files(spark, path))
+    before = _file_stats(files)
+    target = target_file_mb * 1024 * 1024
+    n_out = max(1, math.ceil(before["total_bytes"] / target))
+    if partition_by and fmt == "parquet":
+        n_files, n_bytes = Counter(), Counter()
+        for rel, size in files:
+            n_files[posixpath.dirname(rel)] += 1
+            n_bytes[posixpath.dirname(rel)] += size
+        fragmented = [
+            posixpath.join(path, d)
+            for d in sorted(n_files)
+            if n_files[d] > max(1, math.ceil(n_bytes[d] / target))
+        ]
+        if not fragmented:
+            return {"before": before, "after": before, "target_files": n_out}
+        # the whole table's schema pins the partition column types: inferred
+        # from a few dir names alone, "007" could read back as 7 and be
+        # written to a new partition beside the old one
+        schema = read_path(spark, path, "parquet").schema
+        df = spark.read.schema(schema).option("basePath", path).parquet(*fragmented)
+        _replace_partitions(spark, path, df, partition_by, [])
     else:
-        # coalesce (no shuffle) is enough to merge files; repartition would
-        # add an exchange only to re-split — unnecessary for pure compaction
-        out = df.coalesce(n_out)
-    _replace_table(spark, path, out, partition_by, fmt)
+        df = read_path(spark, path, fmt)
+        if partition_by:
+            # partitioned table: preserve the layout — repartition on the
+            # partition columns (one output file per partition value) and write
+            # partitionBy, otherwise compaction would silently flatten the
+            # table and break partition pruning
+            out = df.repartition(*[F.col(c) for c in _as_list(partition_by)])
+        else:
+            # coalesce (no shuffle) is enough to merge files; repartition would
+            # add an exchange only to re-split — unnecessary for pure compaction
+            out = df.coalesce(n_out)
+        _replace_table(spark, path, out, partition_by, fmt)
     after = table_file_stats(spark, lakehouse, table_name)
     return {"before": before, "after": after, "target_files": n_out}
 

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
+from collections import Counter
 
 import pyspark.sql.functions as F
+import pytest
 
 from ecu_sbl_aace_datalake_spark.sources.catalog import Lakehouse
 from ecu_sbl_aace_datalake_spark.sources.incremental import (
@@ -13,6 +17,15 @@ from ecu_sbl_aace_datalake_spark.sources.incremental import (
     upsert_table,
 )
 from ecu_sbl_aace_datalake_spark.sources.io import load_table, read_path, write_table
+
+
+def _files_per_partition(table_dir: str) -> dict[str, list[str]]:
+    """Partition dir name -> sorted data file names in it."""
+    return {
+        d: sorted(f for f in os.listdir(os.path.join(table_dir, d)) if f.endswith(".parquet"))
+        for d in sorted(os.listdir(table_dir))
+        if "=" in d
+    }
 
 
 class TestUpsert:
@@ -197,6 +210,35 @@ class TestPartitionKeyChange:
         rows = {(r.id, r.part) for r in back.collect()}
         assert rows == {(2, "B")}, rows
 
+    def test_upsert_and_delete_leave_one_file_per_partition(self, spark):
+        """Every partition an upsert or delete rewrites holds one data file,
+        the layout compaction would otherwise have to restore."""
+        from ecu_sbl_aace_datalake_spark.sources.incremental import delete_rows
+
+        lh = Lakehouse("one", tempfile.mkdtemp())
+        schema = "id long, part string, v double"
+        rows = [(i, "ABC"[i % 3], float(i)) for i in range(30)]
+        write_table(lh, "t", spark.createDataFrame(rows, schema).coalesce(1), partition_by="part")
+        table_dir = f"{lh.tables_path}/t"
+        # updates ids 0 (A) and 1 (B), inserts 100 (A) and 101 (B), spread
+        # over several input partitions
+        changes = [(0, "A", -1.0), (1, "B", -2.0), (100, "A", 5.0), (101, "B", 6.0)]
+        updates = spark.createDataFrame(changes, schema).repartition(4)
+        upsert_table(spark, lh, "t", updates, keys=["id"], partition_by="part")
+        expected = Counter([r for r in rows if r[0] > 1] + changes)
+        layout = _files_per_partition(table_dir)
+        assert sorted(layout) == ["part=A", "part=B", "part=C"]
+        assert all(len(files) == 1 for files in layout.values()), layout
+        back = read_path(spark, table_dir, "parquet")
+        assert Counter((r.id, r.part, r.v) for r in back.collect()) == expected
+
+        delete_rows(spark, lh, "t", spark.createDataFrame([(3,)], "id long"),
+                    keys=["id"], partition_by="part")
+        del expected[(3, "A", 3.0)]
+        layout = _files_per_partition(table_dir)
+        assert all(len(files) == 1 for files in layout.values()), layout
+        back = read_path(spark, table_dir, "parquet")
+        assert Counter((r.id, r.part, r.v) for r in back.collect()) == expected
 
     def test_rewrites_through_hadoop_fs(self, spark, monkeypatch):
         """The swap and the stale-partition removal also work through the
@@ -243,6 +285,105 @@ class TestPartitionedCompaction:
         back = read_path(spark, f"{lh.tables_path}/orders", "parquet")
         assert back.count() == orders.count()
         assert "o_orderstatus" in back.columns
+
+    @pytest.mark.parametrize("hadoop_fs", [False, True], ids=["local", "hadoop_fs"])
+    def test_rewrites_only_fragmented_partitions(self, spark, sf_dir, monkeypatch, hadoop_fs):
+        """Compact partitions keep their files; a second compaction of the
+        now compact table writes nothing."""
+        from ecu_sbl_aace_datalake_spark.sources import io
+
+        if hadoop_fs:  # list and read through the Hadoop FileSystem
+            monkeypatch.setattr(io, "_local_path", lambda path: None)
+        lh = Lakehouse("frag", tempfile.mkdtemp())
+        table_dir = f"{lh.tables_path}/orders"
+        orders = load_table(spark, sf_dir, "orders")
+        orders.repartition("o_orderstatus").write.partitionBy("o_orderstatus").parquet(table_dir)
+        extra = orders.where("o_orderstatus = 'P'").withColumn(
+            "o_orderkey", F.col("o_orderkey") + 10_000_000
+        )
+        extra.coalesce(1).write.mode("append").partitionBy("o_orderstatus").parquet(table_dir)
+        before = _files_per_partition(table_dir)
+        assert {d: len(f) for d, f in before.items()} == {
+            "o_orderstatus=F": 1, "o_orderstatus=O": 1, "o_orderstatus=P": 2
+        }
+        # what an interrupted write leaves: a read of the table skips it
+        stale = os.path.join(table_dir, ".spark-staging-0", "o_orderstatus=F")
+        os.makedirs(stale)
+        for f in before["o_orderstatus=P"]:
+            shutil.copy(os.path.join(table_dir, "o_orderstatus=P", f), stale)
+        rows = Counter(read_path(spark, table_dir, "parquet").collect())
+
+        io.compact_table(spark, lh, "orders", partition_by="o_orderstatus")
+        after = _files_per_partition(table_dir)
+        assert after["o_orderstatus=F"] == before["o_orderstatus=F"]
+        assert after["o_orderstatus=O"] == before["o_orderstatus=O"]
+        assert len(after["o_orderstatus=P"]) == 1
+        assert Counter(read_path(spark, table_dir, "parquet").collect()) == rows
+
+        stats = io.compact_table(spark, lh, "orders", partition_by="o_orderstatus")
+        assert _files_per_partition(table_dir) == after
+        assert stats["after"] == stats["before"]
+
+    def test_partition_types_come_from_the_whole_table(self, spark):
+        """Read alone, dir ``part=007`` would type ``part`` as an int and be
+        written back as ``part=7``, beside the old partition."""
+        from ecu_sbl_aace_datalake_spark.sources.io import compact_table
+
+        lh = Lakehouse("pin", tempfile.mkdtemp())
+        table_dir = f"{lh.tables_path}/t"
+        df = spark.createDataFrame([(1, "007"), (2, "abc")], "id long, part string")
+        df.coalesce(1).write.partitionBy("part").parquet(table_dir)
+        spark.createDataFrame([(3, "007")], df.schema).write.mode("append").partitionBy(
+            "part"
+        ).parquet(table_dir)
+        compact_table(spark, lh, "t", partition_by="part")
+        assert sorted(_files_per_partition(table_dir)) == ["part=007", "part=abc"]
+        back = read_path(spark, table_dir, "parquet")
+        assert sorted(tuple(r) for r in back.collect()) == [(1, "007"), (2, "abc"), (3, "007")]
+
+    def test_partitions_at_target_size_keep_their_files(self, spark):
+        """A partition holding no more files than its size needs at
+        ``target_file_mb`` is left alone; a small one with two is not."""
+        from ecu_sbl_aace_datalake_spark.sources.io import compact_table
+
+        lh = Lakehouse("size", tempfile.mkdtemp())
+        table_dir = f"{lh.tables_path}/t"
+        for seed in (1, 2):  # one file per partition each; ~1.2 MB in "big"
+            big = spark.range(150_000).select(F.rand(seed).alias("v"), F.lit("big").alias("part"))
+            small = spark.createDataFrame([(float(seed), "small")], big.schema)
+            big.unionByName(small).coalesce(1).write.mode("append").partitionBy("part").parquet(
+                table_dir
+            )
+        before = _files_per_partition(table_dir)
+        assert {d: len(f) for d, f in before.items()} == {"part=big": 2, "part=small": 2}
+        compact_table(spark, lh, "t", target_file_mb=1, partition_by="part")
+        after = _files_per_partition(table_dir)
+        assert after["part=big"] == before["part=big"]
+        assert len(after["part=small"]) == 1
+        assert read_path(spark, table_dir, "parquet").count() == 300_002
+
+    def test_other_formats_are_rewritten_whole(self, spark):
+        """Only parquet partitions are rewritten in place; a partitioned
+        table in another format is rewritten whole, in that format."""
+        from ecu_sbl_aace_datalake_spark.sources.io import compact_table
+
+        lh = Lakehouse("orc", tempfile.mkdtemp())
+        table_dir = f"{lh.tables_path}/t"
+        rows = [(i, "AB"[i % 2]) for i in range(8)]
+        df = spark.createDataFrame(rows, "id long, part string")
+        write_table(lh, "t", df.repartition(4), partition_by="part", fmt="orc")
+
+        def orc_files() -> list[int]:
+            return [
+                len([f for f in os.listdir(os.path.join(table_dir, d)) if f.endswith(".orc")])
+                for d in ("part=A", "part=B")
+            ]
+
+        assert max(orc_files()) > 1
+        compact_table(spark, lh, "t", fmt="orc", partition_by="part")
+        assert orc_files() == [1, 1]
+        back = read_path(spark, table_dir, "orc")
+        assert sorted((r.id, r.part) for r in back.collect()) == rows
 
 
 class TestNeardupIndex:
