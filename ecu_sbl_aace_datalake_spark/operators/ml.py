@@ -27,6 +27,7 @@ use cases (quality-score calibration, feature screening, drift).
 
 from __future__ import annotations
 
+from fractions import Fraction
 from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -55,14 +56,16 @@ _DEC = "decimal(18,6)"
 
 # Frozen OLS weights: linreg_fit(lineitem@sf0.001, ["l_quantity",
 # "l_discount"], "l_extendedprice") — [intercept, w_quantity, w_discount].
-# Bit-deterministic provenance (exact decimal moments + fixed LAPACK
-# solve); tests/test_ml.py re-fits and asserts equality, same pattern as
+# Each weight is the correctly rounded exact solution of the normal
+# equations (exact decimal moments, exact rational elimination, one
+# rounding to double), so it is the same on any CPU and any BLAS;
+# tests/test_ml.py re-fits and asserts equality, same pattern as
 # classifier.WEIGHTS_QUALITY_V1. Scoring queries embed these as literals
 # so the residual analysis is fully SQL-oracle-able.
 WEIGHTS_PRICE_V1 = [
-    52606.645296310235,
-    -20.778911718791665,
-    16147.383298783365,
+    52606.64529631023,
+    -20.77891171879111,
+    16147.383298783216,
 ]
 
 
@@ -140,16 +143,23 @@ def linreg_fit(
 
     One aggregate computes the (d+1)×(d+1) moment matrix XᵀX and vector
     Xᵀy as exact decimal sums — the ONLY data that reaches the driver —
-    then numpy solves the tiny system. ``l2`` adds ridge regularization
-    to the non-intercept diagonal. Returns ``[w_intercept, w_f1, ...]``.
+    then the tiny system is solved by exact rational elimination
+    (``fractions.Fraction``) on those exact moments, and each weight is
+    rounded to a double once, at the end. ``l2`` adds ridge
+    regularization (as its exact value) to the non-intercept diagonal.
+    Returns ``[w_intercept, w_f1, ...]``.
 
-    Deterministic end to end: exact moments + a fixed LAPACK solve on a
-    fixed matrix. Refitting on the same data reproduces the same weights
-    bit-for-bit (the provenance property the frozen-weight scoring
-    queries rely on, same pattern as classifier.WEIGHTS_QUALITY_V1).
+    Deterministic end to end: no float arithmetic and no BLAS/LAPACK call
+    before the final correctly rounded conversion, so the weights are the
+    same on any CPU and any BLAS. Refitting on the same data reproduces
+    the same weights bit-for-bit (the provenance property the
+    frozen-weight scoring queries rely on, same pattern as
+    classifier.WEIGHTS_QUALITY_V1).
+
+    Raises ``numpy.linalg.LinAlgError`` when the system is singular (a
+    constant or collinear feature, or no rows), as ``np.linalg.solve``
+    would.
     """
-    import numpy as np
-
     feats = list(feature_cols)
     cols = [F.lit(1.0).cast(_DEC).alias("__x0")] + [
         _d(F.col(c)).alias(f"__x{i+1}") for i, c in enumerate(feats)
@@ -167,16 +177,35 @@ def linreg_fit(
             )
         aggs.append(F.sum(F.col(f"__x{i}") * F.col("__y")).alias(f"v_{i}"))
     row = xy.agg(*aggs).collect()[0]
-    xtx = np.zeros((d, d))
-    xty = np.zeros(d)
+    m = [[Fraction(0)] * (d + 1) for _ in range(d)]
     for i in range(d):
         for j in range(i, d):
-            xtx[i, j] = xtx[j, i] = float(row[f"m_{i}_{j}"] or 0)
-        xty[i] = float(row[f"v_{i}"] or 0)
+            m[i][j] = m[j][i] = Fraction(row[f"m_{i}_{j}"] or 0)
+        m[i][d] = Fraction(row[f"v_{i}"] or 0)
     if l2:
         for i in range(1, d):
-            xtx[i, i] += l2
-    return [float(w) for w in np.linalg.solve(xtx, xty)]
+            m[i][i] += Fraction(l2)
+    return [float(w) for w in _solve_exact(m)]
+
+
+def _solve_exact(m: List[List[Fraction]]) -> List[Fraction]:
+    """Solve the d×(d+1) augmented system ``m`` by Gauss-Jordan
+    elimination in exact rationals (any non-zero pivot is exact, so no
+    pivoting strategy is needed). Raises ``numpy.linalg.LinAlgError`` on
+    a singular matrix, the error ``np.linalg.solve`` raises."""
+    from numpy.linalg import LinAlgError
+
+    d = len(m)
+    for c in range(d):
+        p = next((r for r in range(c, d) if m[r][c]), None)
+        if p is None:
+            raise LinAlgError("Singular matrix")
+        m[c], m[p] = m[p], m[c]
+        for r in range(d):
+            if r != c and m[r][c]:
+                f = m[r][c] / m[c][c]
+                m[r] = [a - f * b for a, b in zip(m[r], m[c])]
+    return [m[i][d] / m[i][i] for i in range(d)]
 
 
 def linreg_score(

@@ -11241,9 +11241,9 @@ SQL_LINREG_RESIDUALS = """
 WITH s AS (
   SELECT l_returnflag,
     CAST(CAST(l_extendedprice AS DOUBLE)
-         - (52606.645296310235
-            + (-20.778911718791665) * CAST(l_quantity AS DOUBLE)
-            + 16147.383298783365 * CAST(l_discount AS DOUBLE))
+         - (52606.64529631023
+            + (-20.77891171879111) * CAST(l_quantity AS DOUBLE)
+            + 16147.383298783216 * CAST(l_discount AS DOUBLE))
          AS DECIMAL(18,6)) AS resid
   FROM lineitem
   WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL

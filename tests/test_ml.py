@@ -68,6 +68,35 @@ class TestLinregFit:
         w = ml.linreg_fit(li, ["l_quantity", "l_discount"], "l_extendedprice")
         assert w == ml.WEIGHTS_PRICE_V1
 
+    def test_exact_data_gives_exact_weights(self, spark):
+        """y = 1 + 2·x1 + 3·x2 holds exactly on decimal inputs, so the
+        exact solve returns exactly [1, 2, 3] — a float LAPACK solve of
+        the same moments does not promise that."""
+        from decimal import Decimal
+
+        xs = [("0.5", "1.25"), ("1.75", "0.1"), ("3.2", "2.6"),
+              ("4.05", "0.3"), ("5.5", "4.75"), ("6.1", "1.9")]
+        data = [
+            (Decimal(a), Decimal(b), 1 + 2 * Decimal(a) + 3 * Decimal(b))
+            for a, b in xs
+        ]
+        df = spark.createDataFrame(
+            data, "x1 decimal(10,2), x2 decimal(10,2), y decimal(10,2)"
+        )
+        assert ml.linreg_fit(df, ["x1", "x2"], "y") == [1.0, 2.0, 3.0]
+
+    def test_singular_system_raises(self, spark):
+        """A constant feature is collinear with the intercept: the solve
+        raises numpy's LinAlgError, as np.linalg.solve does."""
+        from numpy.linalg import LinAlgError
+
+        df = spark.createDataFrame(
+            [(5.0, float(i), 2.0 * i) for i in range(5)],
+            "c double, x double, y double",
+        )
+        with pytest.raises(LinAlgError):
+            ml.linreg_fit(df, ["c", "x"], "y")
+
     def test_score_weight_guard(self, spark):
         df = spark.createDataFrame([(1.0,)], "x double")
         with pytest.raises(ValueError):
