@@ -358,6 +358,45 @@ def lsh_plan(
     )
 
 
+def _minhash_verified_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    scope: CacheScope | None,
+    plan: dict | None,
+    seed: int = 1,
+) -> DataFrame:
+    """Verified near-dup pairs ``(id_a, id_b, jaccard)`` of ``df``:
+    shingle → sign → band → candidate pairs → exact Jaccard verify.
+    ``plan`` (a :func:`lsh_plan` dict) overrides ``num_hashes``/``bands``.
+
+    The ``(id, shingles, minhash)`` relation is persisted in ``scope``
+    (``df.persist()`` when ``scope`` is None) ONCE: it feeds the banding
+    branch and both sides of the Jaccard join-back (3 recomputes
+    otherwise), and the cache boundary blocks CollapseProject from
+    inlining the signature expression into the banding references, so
+    the band stage needs no exchange barrier. Shingle HASHES, not
+    strings: set semantics only, ~5x cheaper to build."""
+    if plan is not None:
+        num_hashes, bands = plan["num_hashes"], plan["bands"]
+    sh = persist_in(
+        scope,
+        minhash_signatures(
+            shingle_hashes(ensure_parallelism(df), text_col, n=n),
+            num_hashes=num_hashes,
+            seed=seed,
+        ).select(id_col, "shingles", "minhash"),
+    )
+    pairs = lsh_candidate_pairs(
+        sh, id_col, bands=bands, num_hashes=num_hashes, barrier=False
+    )
+    return jaccard_verify(pairs, sh, id_col, threshold=threshold)
+
+
 def minhash_dedup(
     df: DataFrame,
     id_col: str,
@@ -370,38 +409,24 @@ def minhash_dedup(
     plan: dict | None = None,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup removal: shingle → sign → band →
-    candidate pairs → Jaccard verify → connected survivors.
+    candidate pairs → Jaccard verify → single-hop survivors.
 
     Survivor rule: within each verified near-dup pair, the smaller id wins;
     a doc is dropped if it appears as the larger id of any verified pair
-    (transitive chains collapse toward the minimum via the pair relation —
-    single-hop, which matches common LSH dedup practice; full
-    connected-components would need iterative joins).
+    (single-hop, which matches common LSH dedup practice, and needs no
+    iterative rounds). :func:`minhash_dedup_transitive` keeps one doc per
+    connected component instead.
 
     ``plan=`` (a :func:`lsh_plan` dict) overrides ``num_hashes``/
     ``bands`` with the recall-targeted banding; the exact-Jaccard
     verify step makes any plan CORRECT — the plan only moves the
     band-stage recall/cost point.
     """
-    if plan is not None:
-        num_hashes, bands = plan["num_hashes"], plan["bands"]
-    # cache (id, shingles, minhash) ONCE: it feeds the banding branch and
-    # both sides of the jaccard join-back (3 recomputes otherwise), and the
-    # cache boundary blocks CollapseProject from inlining the signature
-    # expression into the 64 banding references. Shingle HASHES, not
-    # strings: set semantics only, ~5x cheaper to build.
-    sh = persist_in(
-        scope,
-        minhash_signatures(
-            shingle_hashes(ensure_parallelism(df), text_col, n=n),
-            num_hashes=num_hashes,
-        ).select(id_col, "shingles", "minhash"),
+    verified = _minhash_verified_pairs(
+        df, id_col, text_col, n, num_hashes, bands, threshold, scope, plan
     )
-    pairs = lsh_candidate_pairs(sh, id_col, bands=bands, num_hashes=num_hashes, barrier=False)
-    verified = jaccard_verify(pairs, sh, id_col, threshold=threshold)
     losers = verified.select(F.col("id_b").alias(id_col)).distinct()
-    out = df.join(losers, id_col, "left_anti")
-    return out
+    return df.join(losers, id_col, "left_anti")
 
 
 def minhash_dedup_transitive(
@@ -423,28 +448,14 @@ def minhash_dedup_transitive(
     THROUGH it, the cluster rule keeps exactly one representative per
     connected group — the Lee-et-al./SlimPajama convention.
 
-    Costs one O(log n)-round pointer-jumping CC over the (sparse) verified
-    pair relation on top of minhash_dedup's pipeline; pair volume, not
-    corpus volume, drives the extra work. ``plan=`` (a :func:`lsh_plan`
-    dict) overrides ``num_hashes``/``bands``."""
-    if plan is not None:
-        num_hashes, bands = plan["num_hashes"], plan["bands"]
-    sh = persist_in(
-        scope,
-        minhash_signatures(
-            shingle_hashes(ensure_parallelism(df), text_col, n=n),
-            num_hashes=num_hashes,
-        ).select(id_col, "shingles", "minhash"),
+    Costs a big-star CC (O(log² n) rounds, one job each) over the
+    (sparse) verified pair relation on top of minhash_dedup's pipeline;
+    pair volume, not corpus volume, drives the extra work. ``plan=`` (a
+    :func:`lsh_plan` dict) overrides ``num_hashes``/``bands``."""
+    verified = _minhash_verified_pairs(
+        df, id_col, text_col, n, num_hashes, bands, threshold, scope, plan
     )
-    pairs = lsh_candidate_pairs(
-        sh, id_col, bands=bands, num_hashes=num_hashes, barrier=False
-    )
-    verified = jaccard_verify(pairs, sh, id_col, threshold=threshold)
-    clusters = duplicate_clusters(verified, "id_a", "id_b")
-    losers = clusters.where(F.col("node") != F.col("cluster")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
+    return dedup_by_clusters(df, id_col, duplicate_clusters(verified))
 
 
 def _pin(df: DataFrame, reliable: bool) -> DataFrame:
@@ -459,177 +470,35 @@ def _pin(df: DataFrame, reliable: bool) -> DataFrame:
     return df.checkpoint() if reliable else df.localCheckpoint()
 
 
+def _fingerprint(u: str, v: str) -> tuple:
+    """Aggregate columns ``(n, h)``: row count and the sum of
+    ``xxhash64(u, v)`` over the rows, an order-insensitive fingerprint of
+    a pair relation. The hashes are summed as ``decimal(28,0)`` (a
+    ``decimal(38,0)`` sum): a long sum wraps past 2^63, which an ANSI
+    session rejects with ARITHMETIC_OVERFLOW, and the decimal keeps all 64
+    bits of every hash for up to ~10^19 rows."""
+    return (
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(F.xxhash64(u, v).cast("decimal(28,0)")), F.lit(0)
+        ).alias("h"),
+    )
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     id_col_a: str = "id_a",
     id_col_b: str = "id_b",
     max_iter: int = 30,
-    strict: bool = True,
     stats: dict | None = None,
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Transitive near-dup clusters from a pair relation: connected
-    components via iterative min-label propagation.
+    components via alternating large-star / small-star (Kiveris et al.,
+    *Connected Components in MapReduce and Beyond*, SoCC'14).
 
-    Each node starts labeled with itself; every round, each node adopts
-    the minimum label among itself and its neighbors, then shortcuts via
-    its label's label (pointer jump); converged when no label changes.
-    The pointer jump only accelerates along label chains — a NEW minimum
-    still enters a region one graph-hop per round, so convergence is
-    bounded by component "distance-to-min", not log(n) (measured: a
-    200-node/150-edge random graph needs 11-15 rounds; near-dup
-    components are tiny and converge in 2-3). For graphs that may carry
-    large-diameter components, use ``duplicate_clusters_bigstar`` —
-    provably O(log² n) rounds.
-
-    ``strict=True`` raises ``RuntimeError`` if ``max_iter`` rounds pass
-    without reaching the fixpoint — a silently over-split clustering
-    would let duplicates survive dedup undetected.
-
-    Scale notes: each round is two hash joins on node id +
-    ``localCheckpoint`` to truncate lineage (iterative plans otherwise grow
-    exponentially and overwhelm the optimizer). The convergence check is
-    FOLDED into the checkpoint job via ``Observation`` metrics (round 12,
-    the big-star recipe from round 11): labels only ever decrease, so the
-    label relation changed iff its (count, xxhash64 sum) fingerprint
-    changed — one job per round instead of checkpoint + a separate
-    old-vs-new join/count action.
-
-    ``reliable_checkpoint=True`` pins every per-round relation with
-    fault-tolerant ``checkpoint()`` (requires ``sc.setCheckpointDir``)
-    instead of executor-local ``localCheckpoint`` — see :func:`_pin`;
-    use it for multi-hour 100 TB runs where executor loss mid-loop must
-    not fail the job. Construction is EAGER either way (each round runs
-    its job when built).
-
-    Returns ``(node, cluster)`` where cluster = min node id of the
-    component. Nodes not in any pair are absent (they're their own
-    singleton clusters by definition).
-    """
-    edges = (
-        # both directions via ONE explode pass (round 11, guide §2.4): the
-        # earlier two-branch union evaluated the upstream pair pipeline
-        # (e.g. the full MinHash-LSH verify) once per branch inside the
-        # checkpoint job; explode reads it exactly once
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(id_col_a).alias("a"), F.col(id_col_b).alias("b")
-                    ),
-                    F.struct(
-                        F.col(id_col_b).alias("a"), F.col(id_col_a).alias("b")
-                    ),
-                )
-            ).alias("__e")
-        )
-        .select("__e.a", "__e.b")
-        .distinct()
-        # materialize ONCE: every propagation round joins edges, and an
-        # un-checkpointed plan re-derives the entire upstream pair pipeline
-        # per round — measured 5.4 s → 2.5 s on minhash_dedup_transitive
-        # at sf0.1
-    )
-    edges = _pin(edges, reliable_checkpoint)
-    # Convergence fingerprint folded into each round's checkpoint job
-    # (round 12 — the duplicate_clusters_bigstar observe() recipe, guide
-    # §1.5/§2.4): per node the label is monotonically non-increasing
-    # (least of old and propagated), so the label relation changed iff the
-    # (row count, Σ xxhash64(node, cluster)) fingerprint changed. The
-    # Observation fires on the eager localCheckpoint action, replacing the
-    # previous per-round old-vs-new join + limit(1).count() job — one job
-    # per round instead of two, identical rounds/labels.
-    from pyspark.sql import Observation
-
-    def _fingerprint_cols():
-        return (
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("node", "cluster")), F.lit(0)
-            ).alias("h"),
-        )
-
-    obs0 = Observation()
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("cluster", F.col("node"))
-        .observe(obs0, *_fingerprint_cols())
-    )
-    labels = _pin(labels, reliable_checkpoint)
-    got0 = obs0.get
-    sig = (got0["n"], got0["h"])
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("cluster").alias("nmin"))
-        )
-        propagated = labels.join(
-            neighbor_min, labels.node == neighbor_min.a, "left"
-        ).select(
-            "node",
-            F.least(F.col("cluster"), F.coalesce("nmin", F.col("cluster"))).alias(
-                "cluster"
-            ),
-        )
-        # pointer-jumping shortcut: adopt the label OF my label — this is
-        # what makes convergence logarithmic in component diameter (plain
-        # propagation moves labels one hop per round)
-        lhs, rhs = propagated.alias("x"), propagated.alias("y")
-        obs = Observation()
-        new_labels = (
-            lhs.join(rhs, F.col("x.cluster") == F.col("y.node"), "left")
-            .select(
-                F.col("x.node").alias("node"),
-                F.least(
-                    F.col("x.cluster"),
-                    F.coalesce(F.col("y.cluster"), F.col("x.cluster")),
-                ).alias("cluster"),
-            )
-            .observe(obs, *_fingerprint_cols())
-        )
-        new_labels = _pin(new_labels, reliable_checkpoint)
-        got = obs.get
-        new_sig = (got["n"], got["h"])
-        labels = new_labels
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        if strict:
-            raise RuntimeError(
-                f"duplicate_clusters did not converge in {max_iter} rounds; "
-                "raise max_iter or use duplicate_clusters_bigstar"
-            )
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels
-
-
-def duplicate_clusters_bigstar(
-    pairs: DataFrame,
-    id_col_a: str = "id_a",
-    id_col_b: str = "id_b",
-    max_iter: int = 20,
-    stats: dict | None = None,
-    strict: bool = False,
-    reliable_checkpoint: bool = False,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., *Connected Components in MapReduce and Beyond*,
-    SoCC'14) — the extreme-scale alternative to ``duplicate_clusters``.
-
-    Why a second formulation: min-label propagation keeps a ``labels``
-    relation of |V| rows AND the full edge relation live every round, and
-    its convergence check joins two |V| relations. The star algorithm
-    rewrites the EDGE set in place — each round strictly shrinks/reshapes
-    it toward a star per component — so for trillion-edge graphs the
-    working set decays as components collapse, and the convergence check
-    is one cheap aggregate over the current edges (count + hash sum), not
-    a join of old-vs-new labels.
+    The rounds rewrite the EDGE set in place, reshaping it toward one star
+    per component, so the working set decays as components collapse:
 
     - large-star: every node hands its LARGER neighbors to the minimum of
       its neighborhood (incl. itself) — keeps components connected while
@@ -641,9 +510,14 @@ def duplicate_clusters_bigstar(
     O(log² n) rounds (O(log n) observed). At convergence every edge is
     ``(node → component-min)``.
 
-    Returns ``(node, cluster)`` with the same contract as
-    ``duplicate_clusters``: cluster = min node id of the component, nodes
-    not in any pair absent.
+    Convergence is detected by the edge set's (count, hash-sum)
+    fingerprint (:func:`_fingerprint`) repeating between two rounds, so a
+    fingerprint collision (~2^-64 per round) would stop the loop early.
+    Each round is ONE job: the fingerprint is an ``Observation`` on the
+    round's checkpoint. A run that has not converged after ``max_iter``
+    rounds raises ``RuntimeError`` — a silently over-split clustering
+    would let duplicates survive dedup undetected. ``stats`` (a dict)
+    receives ``rounds`` and ``converged``, also when the run raises.
 
     ``reliable_checkpoint=True`` swaps every lineage pin (pair base,
     per-round edge set, final labels) from executor-local
@@ -651,7 +525,14 @@ def duplicate_clusters_bigstar(
     :func:`_pin`; required posture for multi-hour 100 TB runs (an
     executor loss mid-loop otherwise fails the whole job). Construction
     is EAGER either way: building the plan runs the CC rounds.
+
+    Returns ``(node, cluster)`` where cluster = min node id of the
+    component. Every node appearing in ``pairs`` gets a label (a node
+    whose only pairs are self-pairs labels itself); nodes not in any pair
+    are absent (they're their own singleton clusters by definition).
     """
+    from pyspark.sql import Observation
+
     # Materialize the NARROW pair projection once (round 11, guide §1.2/§2.4):
     # `nodes` and `edges` both consume `pairs`, and when the caller hands an
     # unpersisted relation (the common shape: jaccard_verify over an LSH
@@ -668,15 +549,7 @@ def duplicate_clusters_bigstar(
     ).distinct()
     edges = base.where(F.col("u") != F.col("v"))
 
-    def _signature(e: DataFrame) -> tuple:
-        # one aggregate action; order-insensitive edge-set fingerprint
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    sig = _signature(edges)
+    sig = tuple(edges.agg(*_fingerprint("u", "v")).first())
     rounds = 0
     converged = False
     for _ in range(max_iter):
@@ -716,39 +589,25 @@ def duplicate_clusters_bigstar(
         # Fold the convergence signature into the checkpoint job itself
         # (round 11, guide §1.5/§2.4): observation metrics fire on the
         # eager localCheckpoint action, so each round runs ONE job, not a
-        # checkpoint + a separate signature aggregate. Same (count,
-        # hash-sum) fingerprint over the identical per-round edge set.
-        from pyspark.sql import Observation
-
+        # checkpoint + a separate signature aggregate.
         obs = Observation()
-        small = _pin(
-            small.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-            ),
-            reliable_checkpoint,
-        )
+        edges = _pin(small.observe(obs, *_fingerprint("u", "v")), reliable_checkpoint)
         got = obs.get
         new_sig = (got["n"], got["h"])
-        edges = small
         if new_sig == sig:
             converged = True
             break
         sig = new_sig
-    if not converged and strict:
-        # same contract as duplicate_clusters(strict=True): never hand
-        # back possibly over-split components silently
-        raise RuntimeError(
-            f"duplicate_clusters_bigstar did not converge in {max_iter} "
-            "rounds; raise max_iter"
-        )
     if stats is not None:
         stats["rounds"] = rounds
         stats["converged"] = converged
+    if not converged:
+        raise RuntimeError(
+            f"duplicate_clusters did not converge in {max_iter} rounds; "
+            "raise max_iter"
+        )
     # converged: edges are (node -> root); add the roots themselves, plus
-    # self-labels for nodes whose only pairs were self-pairs (propagation
-    # contract: every node appearing in `pairs` gets a label)
+    # self-labels for nodes whose only pairs were self-pairs
     labeled = (
         edges.select(F.col("u").alias("node"), F.col("v").alias("cluster"))
         .union(
@@ -822,9 +681,8 @@ def merge_into_clusters(
     sub_edges = sub_edges.unionByName(
         aff.select(F.col("node").alias(id_col_a), F.col("node").alias(id_col_b))
     )
-    relabeled = duplicate_clusters_bigstar(
-        sub_edges, id_col_a=id_col_a, id_col_b=id_col_b, max_iter=max_iter,
-        strict=True,
+    relabeled = duplicate_clusters(
+        sub_edges, id_col_a=id_col_a, id_col_b=id_col_b, max_iter=max_iter
     )
     untouched = labels.join(aff_clusters, "cluster", "left_anti")
     return untouched.select("node", "cluster").unionByName(
@@ -1487,22 +1345,15 @@ def persist_dup_clusters(
         return params
 
     scope = CacheScope()
-    sh = persist_in(
-        scope,
-        minhash_signatures(
-            shingle_hashes(ensure_parallelism(df), text_col, n=n),
-            num_hashes=num_hashes,
-            seed=seed,
-        ).select(id_col, "shingles", "minhash"),
-    )
     try:
-        cand = lsh_candidate_pairs(
-            sh, id_col, bands=bands, num_hashes=num_hashes, barrier=False
-        )
         verified = persist_in(
-            scope, jaccard_verify(cand, sh, id_col, threshold=threshold)
+            scope,
+            _minhash_verified_pairs(
+                df, id_col, text_col, n, num_hashes, bands, threshold,
+                scope, None, seed,
+            ),
         )
-        labels = duplicate_clusters_bigstar(verified)
+        labels = duplicate_clusters(verified)
         write_bucketed_table(
             spark, cluster_table, labels, "node", n_buckets,
             sort_cols="node",
@@ -3008,7 +2859,7 @@ def cluster_aware_split(
     documents split by their own id.
 
     ``clusters`` is any ``(node, cluster)`` labeling (e.g.
-    :func:`duplicate_clusters_bigstar` over verified pairs). One LEFT
+    :func:`duplicate_clusters` over verified pairs). One LEFT
     join (clusters are the small side — only docs with a near-dup
     appear) + the deterministic md5-bucket rule of
     :func:`~.transform.hash_split` on ``coalesce(cluster, id)``;

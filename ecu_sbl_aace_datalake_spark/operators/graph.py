@@ -1,7 +1,7 @@
 """Graph analytics over edge DataFrames.
 
 North-star extension breadth beyond the dedup-oriented connected components
-(``dedup.duplicate_clusters`` / ``duplicate_clusters_bigstar``): PageRank as
+(``dedup.duplicate_clusters``, large-star/small-star): PageRank as
 fixed-iteration join-aggregate rounds — the canonical "iterative algorithm
 as a DataFrame plan" shape.
 

@@ -1196,7 +1196,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive duplicate clusters over the verified MinHash pair
     relation, computed with the alternating large-star/small-star CC
-    algorithm (Kiveris SoCC'14, ``dedup.duplicate_clusters_bigstar``) —
+    algorithm (Kiveris SoCC'14, ``dedup.duplicate_clusters``) —
     O(log² n) rounds, edge-set-only working state.
 
     Oracle-verified: DuckDB recomputes the same pair relation brute-force
@@ -1211,7 +1211,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = dedup.lsh_candidate_pairs(sh, "doc_id", bands=32, barrier=False)
     pairs = dedup.jaccard_verify(cand, sh, "doc_id", threshold=0.5)
-    return dedup.duplicate_clusters_bigstar(pairs)
+    return dedup.duplicate_clusters(pairs)
 
 
 SQL_DEDUP_CLUSTERS = r"""
@@ -5452,7 +5452,7 @@ def q_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = dedup.lsh_candidate_pairs(sh, "doc_id", bands=32, barrier=False)
     pairs = dedup.jaccard_verify(cand, sh, "doc_id", threshold=0.5)
-    clusters = dedup.duplicate_clusters_bigstar(pairs)
+    clusters = dedup.duplicate_clusters(pairs)
     return (
         clusters.groupBy("cluster")
         .agg(F.count(F.lit(1)).cast("long").alias("cluster_size"))
@@ -13422,7 +13422,7 @@ def q_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.where(d % 10 < 3).select(
         d.alias("id_a"), (d + 1).alias("id_b")
     )
-    labels = dedup.duplicate_clusters_bigstar(base)
+    labels = dedup.duplicate_clusters(base)
     batch = docs.where(d % 50 == 0).select(
         d.alias("id_a"), (d + 5).alias("id_b")
     )
@@ -16293,7 +16293,7 @@ def q_quality_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = dedup.lsh_candidate_pairs(sh, "doc_id", bands=32, barrier=False)
     pairs = dedup.jaccard_verify(cand, sh, "doc_id", threshold=0.5)
-    clusters = dedup.duplicate_clusters_bigstar(pairs)
+    clusters = dedup.duplicate_clusters(pairs)
     return dedup.dedup_by_clusters_prefer(
         docs, "doc_id", clusters, "n_chars"
     ).select("doc_id", "n_chars")
@@ -16596,7 +16596,7 @@ def q_dup_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = dedup.lsh_candidate_pairs(sh, "doc_id", bands=32, barrier=False)
     pairs = dedup.jaccard_verify(cand, sh, "doc_id", threshold=0.5)
-    clusters = dedup.duplicate_clusters_bigstar(pairs)
+    clusters = dedup.duplicate_clusters(pairs)
     return dedup.dup_weighted_sample(
         docs, clusters, k=100, seed=42
     ).select("doc_id", "dup_count", "resample_score")
@@ -17464,7 +17464,7 @@ def q_cluster_split_leakfree(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = dedup.lsh_candidate_pairs(sh, "doc_id", bands=32, barrier=False)
     pairs = dedup.jaccard_verify(cand, sh, "doc_id", threshold=0.5)
-    clusters = dedup.duplicate_clusters_bigstar(pairs)
+    clusters = dedup.duplicate_clusters(pairs)
     return dedup.cluster_aware_split(
         docs.select("doc_id"), "doc_id", clusters,
         {"train": 0.8, "val": 0.1, "test": 0.1},

@@ -33,7 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import Lakehouse, table_path
-from .io import _replace_partitions, _replace_table, read_path
+from .io import (
+    _in_partitions,
+    _partition_values,
+    _replace_partitions,
+    _replace_table,
+    read_path,
+)
 
 
 def upsert_table(
@@ -65,18 +71,15 @@ def upsert_table(
         # partition value changes must have its old row removed from the
         # old partition, or it would survive as a duplicate
         old_parts = existing.join(updates.select(*keys), keys, "left_semi")
-        affected = [
-            r[0]
-            for r in updates.select(partition_by)
-            .union(old_parts.select(partition_by))
-            .distinct()
-            .collect()
-        ]
-        existing = existing.where(F.col(partition_by).isin(affected))
+        affected, names = _partition_values(
+            updates.select(partition_by).union(old_parts.select(partition_by)),
+            partition_by,
+        )
+        existing = existing.where(_in_partitions(partition_by, affected))
     kept = existing.join(updates.select(*keys), keys, "left_anti")
     merged = kept.unionByName(updates.select(*existing.columns))
     if partition_by:
-        _replace_partitions(spark, path, merged, partition_by, affected)
+        _replace_partitions(spark, path, merged, partition_by, names)
         return {"mode": "dynamic-partition", "partitions_rewritten": len(affected)}
     _replace_table(spark, path, merged, fmt="parquet")
     return {"mode": "full-rewrite"}
@@ -105,18 +108,14 @@ def delete_rows(
     if not partition_by:
         _replace_table(spark, path, existing.join(keys_df, keys, "left_anti"), fmt="parquet")
         return {"mode": "full-rewrite"}
-    affected = [
-        r[0]
-        for r in existing.join(keys_df, keys, "left_semi")
-        .select(partition_by)
-        .distinct()
-        .collect()
-    ]
+    affected, names = _partition_values(
+        existing.join(keys_df, keys, "left_semi"), partition_by
+    )
     if affected:
-        kept = existing.where(F.col(partition_by).isin(affected)).join(
+        kept = existing.where(_in_partitions(partition_by, affected)).join(
             keys_df, keys, "left_anti"
         )
-        _replace_partitions(spark, path, kept, partition_by, affected)
+        _replace_partitions(spark, path, kept, partition_by, names)
     return {"mode": "dynamic-partition", "partitions_rewritten": len(affected)}
 
 

@@ -58,7 +58,7 @@ from collections.abc import Iterator
 from typing import Any
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import Lakehouse, TableRegistry, table_path, view_path
@@ -138,12 +138,28 @@ def _replace_table(
     _remove(spark, back)
 
 
+def _partition_values(df: DataFrame, col: str) -> tuple[list[Any], list[str | None]]:
+    """The distinct values of ``col`` in ``df`` and, in the same order,
+    their Spark string forms, in one job. The string form is the value as
+    Spark casts it to name a partition dir (session time zone; null stays
+    None): Python's ``str()`` of a timestamp or a decimal can differ."""
+    rows = df.select(col, F.col(col).cast("string")).distinct().collect()
+    return [r[0] for r in rows], [r[1] for r in rows]
+
+
+def _in_partitions(col: str, values: list[Any]) -> Column:
+    """``col IN values``, where a None in ``values`` also matches the
+    null partition (SQL ``IN`` never matches null)."""
+    cond = F.col(col).isin([v for v in values if v is not None])
+    return cond | F.col(col).isNull() if None in values else cond
+
+
 def _replace_partitions(
     spark: SparkSession,
     path: str,
     df: DataFrame,
     partition_by: str | list[str],
-    affected: list[Any],
+    affected: list[str | None],
 ) -> None:
     """Overwrite only the partitions ``df`` has rows in (parquet dynamic
     partition overwrite; ``df`` may read the table), each with exactly one
@@ -151,10 +167,17 @@ def _replace_partitions(
     rows in one write task, so one task writes all of a partition however
     large it is. Then remove every partition in ``affected`` the write left
     empty: dynamic overwrite never touches a partition it writes no rows
-    to, so that partition's old files would survive. ``affected`` holds
-    values of a single partition column; a caller partitioning on several
-    passes none. The written partition values come from an observed metric
-    of the write itself, not from a second pass over ``df``."""
+    to, so that partition's old files would survive. ``affected`` holds the
+    Spark string forms (see :func:`_partition_values`) of a single partition
+    column's values; a caller partitioning on several passes none. The
+    written partition values come from an observed metric of the write
+    itself, not from a second pass over ``df``.
+
+    Dir names are built as Spark's writer builds them, by
+    ``ExternalCatalogUtils.getPartitionPathString``: escaped (``a:b`` is
+    ``a%3Ab``), with null and the empty string both written to
+    ``__HIVE_DEFAULT_PARTITION__``; the observed set maps null to the
+    empty string, since ``collect_set`` drops nulls."""
     from pyspark.sql import Observation
 
     cols = _as_list(partition_by)
@@ -162,15 +185,19 @@ def _replace_partitions(
     written = Observation()
     (
         df.repartition(*[F.col(c) for c in cols])
-        .observe(written, F.collect_set(cols[0]).alias("parts"))
+        .observe(
+            written,
+            F.collect_set(F.coalesce(F.col(cols[0]).cast("string"), F.lit(""))).alias("parts"),
+        )
         .write.format("parquet")
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*cols)
         .save(path)
     )
-    for val in set(affected) - set(written.get["parts"]):
-        _remove(spark, posixpath.join(path, f"{cols[0]}={val}"))
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for val in {v or "" for v in affected} - set(written.get["parts"]):
+        _remove(spark, posixpath.join(path, utils.getPartitionPathString(cols[0], val)))
 
 
 def read_path(spark: SparkSession, path: str, fmt: str = DEFAULT_FORMAT) -> DataFrame:

@@ -19,7 +19,7 @@ def _recipe(docs):
     ).select("doc_id", "shingles", "minhash").persist()
     cand = dedup.lsh_candidate_pairs(sh, "doc_id", bands=32, barrier=False)
     pairs = dedup.jaccard_verify(cand, sh, "doc_id", threshold=0.5)
-    clusters = dedup.duplicate_clusters_bigstar(pairs)
+    clusters = dedup.duplicate_clusters(pairs)
     return sh, pairs, clusters
 
 
@@ -109,7 +109,7 @@ class TestAppendDupClusters:
             write_bucketed_table,
         )
 
-        labels = dedup.duplicate_clusters_bigstar(base_pairs)
+        labels = dedup.duplicate_clusters(base_pairs)
         write_bucketed_table(
             spark, "t_r11_app_cl", labels, "node", 8, sort_cols="node"
         )
@@ -129,7 +129,7 @@ class TestAppendDupClusters:
             full = sorted(
                 map(
                     tuple,
-                    dedup.duplicate_clusters_bigstar(
+                    dedup.duplicate_clusters(
                         base_pairs.unionByName(new_pairs)
                     ).collect(),
                 )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import tempfile
@@ -209,6 +210,44 @@ class TestPartitionKeyChange:
         back = read_path(spark, f"{lh.tables_path}/t", "parquet")
         rows = {(r.id, r.part) for r in back.collect()}
         assert rows == {(2, "B")}, rows
+
+    @pytest.mark.parametrize(
+        "part_type, value",
+        [
+            ("string", "a:b"),  # stored escaped, as part=a%3Ab
+            ("string", None),  # stored as part=__HIVE_DEFAULT_PARTITION__
+            # Spark names it ...10%3A00%3A00.12; Python's str() ends .120000
+            ("timestamp", datetime.datetime(2024, 1, 1, 10, 0, 0, 120000)),
+        ],
+        ids=["escaped", "null", "timestamp"],
+    )
+    def test_delete_emptying_a_partition_finds_its_dir(self, spark, part_type, value):
+        """The emptied partition's dir is named the way Spark's writer
+        names it, so removing it also works for names Spark escapes."""
+        from ecu_sbl_aace_datalake_spark.sources.incremental import delete_rows
+
+        lh = Lakehouse("esc", tempfile.mkdtemp())
+        other = "c" if part_type == "string" else datetime.datetime(2024, 1, 2)
+        df = spark.createDataFrame([(1, value), (2, other)], f"id long, part {part_type}")
+        write_table(lh, "t", df, partition_by="part")
+        delete_rows(spark, lh, "t", spark.createDataFrame([(1,)], "id long"),
+                    keys=["id"], partition_by="part")
+        table_dir = f"{lh.tables_path}/t"
+        assert [r.id for r in read_path(spark, table_dir, "parquet").collect()] == [2]
+        assert len(_files_per_partition(table_dir)) == 1
+
+    def test_upsert_into_the_null_partition_keeps_it(self, spark):
+        """An upsert writing the null partition keeps its old rows and the
+        dir: SQL IN never matches null, and collect_set drops nulls."""
+        lh = Lakehouse("nul", tempfile.mkdtemp())
+        schema = "id long, part string, v double"
+        write_table(lh, "t", spark.createDataFrame([(1, None, 1.0), (2, "c", 2.0)], schema),
+                    partition_by="part")
+        upsert_table(spark, lh, "t", spark.createDataFrame([(3, None, 3.0)], schema),
+                     keys=["id"], partition_by="part")
+        back = read_path(spark, f"{lh.tables_path}/t", "parquet")
+        rows = {(r.id, r.part, r.v) for r in back.collect()}
+        assert rows == {(1, None, 1.0), (2, "c", 2.0), (3, None, 3.0)}, rows
 
     def test_upsert_and_delete_leave_one_file_per_partition(self, spark):
         """Every partition an upsert or delete rewrites holds one data file,

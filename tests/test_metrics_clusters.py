@@ -45,8 +45,23 @@ class TestDuplicateClusters:
         )
         assert kept == [1, 99]
 
+    def test_converges_with_ansi_on(self, spark):
+        """The convergence fingerprint sums 64-bit hashes; under ANSI a
+        long sum that wraps raises ARITHMETIC_OVERFLOW instead."""
+        pairs = spark.createDataFrame(
+            [(2 * i, 2 * i + 1) for i in range(100)], "id_a long, id_b long"
+        )
+        key = "spark.sql.ansi.enabled"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "true")
+        try:
+            cl = {r.node: r.cluster for r in duplicate_clusters(pairs).collect()}
+        finally:
+            spark.conf.set(key, before)
+        assert cl == {n: n - n % 2 for n in range(200)}
+
     def test_long_chain_converges(self, spark):
-        # 30-node path graph: worst case for propagation depth
+        # 30-node path graph: the deepest component at this size
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(30)], "id_a long, id_b long"
         )
@@ -73,52 +88,60 @@ class TestDuplicateClusters:
         assert kept[0] == 1 and 4 in kept and 2 not in kept
 
 
+def _union_find_labels(pairs: list[tuple[int, int]]) -> dict[int, int]:
+    """Reference CC: node -> min node id of its component, for every node
+    in ``pairs`` (a self-pair labels its node with itself)."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller root wins, so every root is its component's min
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 class TestBigStarClusters:
-    """Alternating large-star/small-star CC (Kiveris SoCC'14) must agree
-    exactly with min-label propagation on every graph shape."""
+    """Alternating large-star/small-star CC (Kiveris SoCC'14) must give
+    exactly the union-find labels on every graph shape."""
 
-    def _both(self, spark, pairs):
-        from ecu_sbl_aace_datalake_spark.operators.dedup import (
-            duplicate_clusters_bigstar,
-        )
-
-        a = {r.node: r.cluster for r in duplicate_clusters(pairs).collect()}
-        b = {r.node: r.cluster for r in duplicate_clusters_bigstar(pairs).collect()}
-        return a, b
+    def _check(self, spark, rows):
+        pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+        got = {r.node: r.cluster for r in duplicate_clusters(pairs).collect()}
+        assert got == _union_find_labels(rows)
+        return got
 
     def test_chain_and_islands(self, spark):
-        pairs = spark.createDataFrame(
-            [(2, 1), (2, 3), (3, 7), (10, 11)], "id_a long, id_b long"
-        )
-        a, b = self._both(spark, pairs)
-        assert b == {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10} == a
+        got = self._check(spark, [(2, 1), (2, 3), (3, 7), (10, 11)])
+        assert got == {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10}
 
     def test_long_path_graph(self, spark):
-        # 64-node path: deepest propagation case at this size
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(64)], "id_a long, id_b long"
-        )
-        a, b = self._both(spark, pairs)
-        assert a == b and set(b.values()) == {0}
+        # 64-node path: the deepest component at this size
+        got = self._check(spark, [(i, i + 1) for i in range(64)])
+        assert set(got.values()) == {0}
 
-    def test_random_graph_matches_propagation(self, spark):
+    def test_random_graph_matches_union_find(self, spark):
         import random
 
         rng = random.Random(42)
         edges = {(rng.randrange(200), rng.randrange(200)) for _ in range(150)}
-        pairs = spark.createDataFrame(
-            [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
-        )
-        a, b = self._both(spark, pairs)
-        assert a == b
+        got = self._check(spark, [(a, b) for a, b in edges if a != b])
+        assert len(set(got.values())) > 1
 
     def test_star_and_selfloop(self, spark):
         # hub-and-spoke with a self loop and reversed duplicates
         rows = [(5, i) for i in range(6)] + [(3, 5), (7, 7)]
-        pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-        a, b = self._both(spark, pairs)
-        assert a == b and b[7] == 7
-        assert {k: v for k, v in b.items() if k != 7} == {i: 0 for i in range(6)}
+        got = self._check(spark, rows)
+        assert got[7] == 7
+        assert {k: v for k, v in got.items() if k != 7} == {i: 0 for i in range(6)}
 
 
 class TestEmbeddingNearDup:

@@ -6,10 +6,7 @@ and self-pairs."""
 
 import pytest
 
-from ecu_sbl_aace_datalake_spark.operators.dedup import (
-    duplicate_clusters,
-    duplicate_clusters_bigstar,
-)
+from ecu_sbl_aace_datalake_spark.operators.dedup import duplicate_clusters
 
 
 @pytest.fixture(scope="module")
@@ -27,9 +24,7 @@ class TestCCRestructuredInternals:
         rows = [(2, 1), (2, 1), (1, 2), (2, 3), (2, 3), (3, 7), (10, 11), (11, 10)]
         pairs = spark.createDataFrame(rows, "id_a long, id_b long")
         expect = {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10}
-        a = {r.node: r.cluster for r in duplicate_clusters(pairs).collect()}
-        b = {r.node: r.cluster for r in duplicate_clusters_bigstar(pairs).collect()}
-        assert a == expect
+        b = {r.node: r.cluster for r in duplicate_clusters(pairs).collect()}
         assert b == expect
 
     def test_self_pairs_yield_singleton_labels(self, spark):
@@ -39,7 +34,7 @@ class TestCCRestructuredInternals:
             [(5, 5), (2, 1), (9, 9)], "id_a long, id_b long"
         )
         b = {r.node: r.cluster
-             for r in duplicate_clusters_bigstar(pairs).collect()}
+             for r in duplicate_clusters(pairs).collect()}
         assert b == {1: 1, 2: 1, 5: 5, 9: 9}
 
     def test_stats_rounds_still_reported(self, spark):
@@ -47,7 +42,7 @@ class TestCCRestructuredInternals:
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(16)], "id_a long, id_b long"
         )
-        out = duplicate_clusters_bigstar(pairs, stats=stats, strict=True)
+        out = duplicate_clusters(pairs, stats=stats)
         assert out.select("cluster").distinct().count() == 1
         assert stats["converged"] and stats["rounds"] >= 1
 

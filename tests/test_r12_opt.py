@@ -2,10 +2,10 @@
 
 Pins the internals changed this round:
 - duplicate_clusters' observe()-folded convergence (one job per round)
-  must keep labels, rounds and the strict contract exactly as the old
-  join-based changed-check did;
-- the reliable_checkpoint option on both CC implementations must produce
-  identical labels through fault-tolerant checkpoint();
+  must keep labels, rounds and the raise on non-convergence exactly as
+  the old separate signature job did;
+- the reliable_checkpoint option must produce identical labels through
+  fault-tolerant checkpoint();
 - ccnet_buckets' narrow ranking restructure must keep rows, columns and
   null-bucket semantics identical;
 - association_rules' shared (__b, __i) base must match frequent_pairs run
@@ -22,10 +22,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ecu_sbl_aace_datalake_spark.operators.dedup import (
-    duplicate_clusters,
-    duplicate_clusters_bigstar,
-)
+from ecu_sbl_aace_datalake_spark.operators.dedup import duplicate_clusters
 
 
 @pytest.fixture(scope="module")
@@ -41,8 +38,8 @@ def spark(tmp_path_factory):
 
 class TestObserveFoldedConvergence:
     def test_labels_and_rounds_match_expected(self, spark):
-        # a 5-chain + a triangle + duplicated/reversed noise: min-label
-        # with pointer jumping must converge and label by component min
+        # a 5-chain + a triangle + duplicated/reversed noise: must
+        # converge and label by component min
         rows = [
             (1, 2), (2, 3), (3, 4), (4, 5),
             (10, 11), (11, 12), (12, 10), (12, 10),
@@ -65,7 +62,7 @@ class TestObserveFoldedConvergence:
             [(i, i + 1) for i in range(16)], "id_a long, id_b long"
         )
         with pytest.raises(RuntimeError, match="did not converge"):
-            duplicate_clusters(pairs, max_iter=1, strict=True)
+            duplicate_clusters(pairs, max_iter=1)
 
     def test_empty_pairs(self, spark):
         pairs = spark.createDataFrame([], "id_a long, id_b long")
@@ -76,8 +73,9 @@ class TestReliableCheckpoint:
     ROWS = [(2, 1), (2, 3), (3, 7), (10, 11), (5, 5)]
     EXPECT = {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10, 5: 5}
 
-    def test_minlabel_reliable_matches_local(self, spark):
-        pairs = spark.createDataFrame(self.ROWS, "id_a long, id_b long")
+    @staticmethod
+    def _local_and_reliable(spark, rows):
+        pairs = spark.createDataFrame(rows, "id_a long, id_b long")
         local = {
             r.node: r.cluster for r in duplicate_clusters(pairs).collect()
         }
@@ -87,21 +85,22 @@ class TestReliableCheckpoint:
                 pairs, reliable_checkpoint=True
             ).collect()
         }
+        return local, reliable
+
+    def test_minlabel_reliable_matches_local(self, spark):
+        # every node labelled by its component minimum, identically
+        # through reliable checkpoint() and local pins
+        local, reliable = self._local_and_reliable(spark, self.ROWS)
         assert local == reliable == self.EXPECT
 
     def test_bigstar_reliable_matches_local(self, spark):
-        pairs = spark.createDataFrame(self.ROWS, "id_a long, id_b long")
-        local = {
-            r.node: r.cluster
-            for r in duplicate_clusters_bigstar(pairs).collect()
-        }
-        reliable = {
-            r.node: r.cluster
-            for r in duplicate_clusters_bigstar(
-                pairs, reliable_checkpoint=True
-            ).collect()
-        }
-        assert local == reliable == self.EXPECT
+        # a hub whose leaves all exceed it plus a leaf chained off to a
+        # smaller id: the large-star step must re-hang the whole star on
+        # the new minimum, the same way under both pin modes
+        rows = [(50, leaf) for leaf in range(51, 61)] + [(60, 70), (70, 40)]
+        local, reliable = self._local_and_reliable(spark, rows)
+        expect = {n: 40 for n in [40, 50, 70, *range(51, 61)]}
+        assert local == reliable == expect
 
 
 class TestCcnetNarrowRanking:

@@ -75,20 +75,19 @@ class TestAdviceFixes:
             [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
         )
         stats: dict = {}
-        out = dedup.duplicate_clusters_bigstar(pairs, stats=stats, strict=True)
+        out = dedup.duplicate_clusters(pairs, stats=stats)
         got = {r["node"]: r["cluster"] for r in out.collect()}
         assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
         assert stats["converged"] is True and stats["rounds"] >= 1
-        # strict=True with an impossible round budget raises
+        # an impossible round budget raises
         with pytest.raises(RuntimeError):
-            dedup.duplicate_clusters_bigstar(
+            dedup.duplicate_clusters(
                 pairs.union(
                     spark.createDataFrame(
                         [(i, i + 1) for i in range(20, 40)], ["id_a", "id_b"]
                     )
                 ),
                 max_iter=1,
-                strict=True,
             )
 
     def test_kmeans_fit_exact_deterministic_and_good(self, spark, sf_dir):

@@ -315,7 +315,7 @@ class TestMergeIntoClusters:
             [(1, 2), (2, 3), (10, 11), (20, 21), (30, 30)],
             "id_a long, id_b long",
         )
-        labels = dedup.duplicate_clusters_bigstar(base)
+        labels = dedup.duplicate_clusters(base)
         # batch: merges {1,2,3} with {10,11} (lowers 10's cluster to 1),
         # links a brand-new node 40 to 41, leaves {20,21} untouched
         batch = spark.createDataFrame(
@@ -323,7 +323,7 @@ class TestMergeIntoClusters:
         )
         merged = {(r.node, r.cluster) for r in
                   dedup.merge_into_clusters(labels, batch).collect()}
-        full = {(r.node, r.cluster) for r in dedup.duplicate_clusters_bigstar(
+        full = {(r.node, r.cluster) for r in dedup.duplicate_clusters(
             base.unionByName(batch)).collect()}
         assert merged == full
         got = dict(merged)
@@ -336,7 +336,7 @@ class TestMergeIntoClusters:
         from ecu_sbl_aace_datalake_spark.operators import dedup
 
         base = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-        labels = dedup.duplicate_clusters_bigstar(base)
+        labels = dedup.duplicate_clusters(base)
         empty = spark.createDataFrame([], "id_a long, id_b long")
         got = {(r.node, r.cluster) for r in
                dedup.merge_into_clusters(labels, empty).collect()}

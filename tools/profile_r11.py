@@ -92,7 +92,7 @@ def main() -> int:
     timed(
         spark,
         "bigstar CC (cached verified pairs)",
-        lambda: dedup.duplicate_clusters_bigstar(ver),
+        lambda: dedup.duplicate_clusters(ver),
         n_runs,
     )
     # end-to-end for reference (what the bench-row family pays)

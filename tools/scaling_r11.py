@@ -45,7 +45,7 @@ def build_clusters_direct(docs):
     ).select("doc_id", "shingles", "minhash").persist()
     cand = dedup.lsh_candidate_pairs(sh, "doc_id", bands=32, barrier=False)
     pairs = dedup.jaccard_verify(cand, sh, "doc_id", threshold=0.5)
-    clusters = dedup.duplicate_clusters_bigstar(pairs)
+    clusters = dedup.duplicate_clusters(pairs)
     return sh, pairs, clusters
 
 
