@@ -150,11 +150,11 @@ def incremental_append(
     path = table_path(lakehouse, table_name)
     wm = get_watermark(lakehouse, table_name)
     fresh = source if wm is None else source.where(F.col(ts_col) > F.lit(wm))
-    new_wm_row = fresh.agg(F.max(ts_col).alias("m")).first()
-    n = fresh.count()
+    # the new watermark and the row count in one job over ``fresh``
+    new_wm, n = fresh.agg(F.max(ts_col), F.count(F.lit(1))).first()
     if n:
         fresh.write.format("parquet").mode("append").save(path)
-        wm_out = str(new_wm_row["m"])
+        wm_out = str(new_wm)
         local_meta = urlparse(_watermark_path(lakehouse, table_name)).path
         os.makedirs(os.path.dirname(local_meta), exist_ok=True)
         with open(local_meta, "w") as f:

@@ -15,7 +15,11 @@ Reference parity (all in common.py):
 Format: Delta when ``delta-spark`` is importable (the reference is
 Delta-only, common.py:448/531), else Parquet — same code path, the
 lakehouse layout and semantics are identical. All writes are overwrite-mode
-with schema overwrite, matching the reference.
+with schema overwrite, matching the reference. Under a
+:func:`~..session.get_spark` session the files are zstd Parquet (or zstd
+Delta data files): the codec is the session's
+``spark.sql.parquet.compression.codec``, which no writer here overrides, so
+one ``spark.conf.set`` switches every write back to snappy.
 
 Replacing a table with a plan that reads that same table (compaction,
 clustering, Z-ordering, upsert, delete, streaming state merges) goes through
@@ -98,8 +102,9 @@ def _hadoop(spark: SparkSession, path: str) -> tuple[Any, Any]:
     return hp.getFileSystem(spark._jsc.hadoopConfiguration()), hp
 
 
-def _remove(spark: SparkSession, path: str) -> None:
-    """Recursively delete ``path``; a missing path is not an error."""
+def _remove(spark: SparkSession | None, path: str) -> None:
+    """Recursively delete ``path``; a missing path is not an error. A local
+    path needs no ``spark``."""
     local = _local_path(path)
     if local is not None:
         shutil.rmtree(local, ignore_errors=True)
@@ -348,12 +353,18 @@ def list_tables(spark: SparkSession, lakehouse: Lakehouse) -> list[str]:
     """Enumerate table names under the Tables/ root (reference ``getTables``
     common.py:497-503 globbed a locally-mounted dir; here: Hadoop FS listing,
     which works for any URI scheme without mounting)."""
-    root = lakehouse.tables_path
-    p = _local_path(root)
-    if p is not None:
-        if not os.path.isdir(p):
+    return _subdirs(spark, lakehouse.tables_path)
+
+
+def _subdirs(spark: SparkSession | None, root: str) -> list[str]:
+    """Sorted names of the dirs directly under ``root`` ([] when ``root``
+    is missing): ``os`` for a local path, else the Hadoop FileSystem, which
+    needs ``spark``."""
+    local = _local_path(root)
+    if local is not None:
+        if not os.path.isdir(local):
             return []
-        return sorted(d for d in os.listdir(p) if os.path.isdir(os.path.join(p, d)))
+        return sorted(d for d in os.listdir(local) if os.path.isdir(os.path.join(local, d)))
     fs, hp = _hadoop(spark, root)
     if not fs.exists(hp):
         return []
@@ -733,7 +744,9 @@ def export_files(
 
     ``single_file=True`` coalesces to one output file — only for small
     exports (it serializes the final write); large exports keep one file per
-    partition.
+    partition. Parquet exports use the session codec (zstd under
+    :func:`~..session.get_spark`); ``**options`` go to the writer, so
+    ``compression="snappy"`` picks another codec for one export.
     """
     if fmt not in ("csv", "json", "parquet", "orc"):
         raise ValueError(f"unsupported export format: {fmt!r}")
@@ -754,19 +767,19 @@ def vacuum_orphans(lakehouse: Lakehouse, dry_run: bool = False) -> list[str]:
 
     The VACUUM of this engine's parquet path (Delta has its own). Matches
     ONLY the engine's own suffix conventions — never user tables. Returns
-    the removed (or, with ``dry_run``, would-be-removed) paths.
+    the removed (or, with ``dry_run``, would-be-removed) paths: local paths
+    for a local lakehouse; for a remote one (``abfss://``, ``s3a://``) the
+    URIs, listed and removed through the Hadoop FileSystem of the active
+    Spark session.
     """
     pat = re.compile(f"({'|'.join(_ORPHAN_MARKERS)})[0-9a-f]{{32}}$")
-    root = _local_path(lakehouse.tables_path) or lakehouse.tables_path
-    removed: list[str] = []
-    if not os.path.isdir(root):
-        return removed
-    for entry in sorted(os.listdir(root)):
-        if pat.search(entry):
-            full = os.path.join(root, entry)
-            removed.append(full)
-            if not dry_run:
-                shutil.rmtree(full, ignore_errors=True)
+    root = lakehouse.tables_path
+    local = _local_path(root)
+    spark = None if local is not None else SparkSession.active()
+    removed = [posixpath.join(local or root, d) for d in _subdirs(spark, root) if pat.search(d)]
+    if not dry_run:
+        for full in removed:
+            _remove(spark, full)
     return removed
 
 

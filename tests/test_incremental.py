@@ -97,6 +97,42 @@ class TestIncrementalAppend:
         )
         assert distinct_ids == total
 
+    def test_watermark_and_count_from_one_job(self, spark):
+        """The new watermark and the appended count come from one aggregate
+        over the fresh rows: same results on a first call, a repeat call
+        that finds nothing new and a call after a newer batch, and a call
+        that appends nothing runs the jobs of that one aggregate alone."""
+        lh = Lakehouse("w1", tempfile.mkdtemp())
+        schema = "id long, ts timestamp"
+
+        def batch(*days):
+            return spark.createDataFrame(
+                [(d, datetime.datetime(2024, 1, d, 6)) for d in days], schema
+            )
+
+        first = batch(1, 2, 3)
+        assert incremental_append(spark, lh, "ev", first, "ts") == {
+            "appended": 3, "watermark": "2024-01-03 06:00:00"
+        }
+        sc = spark.sparkContext
+        sc.setJobGroup("append_nothing_new", "regression")
+        again = incremental_append(spark, lh, "ev", first, "ts")
+        sc.setJobGroup("one_aggregate", "regression")
+        first.where(F.col("ts") > F.lit("2024-01-03 06:00:00")).agg(
+            F.max("ts"), F.count(F.lit(1))
+        ).first()
+        sc.setJobGroup("", "")
+        assert again == {"appended": 0, "watermark": "2024-01-03 06:00:00"}
+        tracker = sc.statusTracker()
+        assert len(tracker.getJobIdsForGroup("append_nothing_new")) == len(
+            tracker.getJobIdsForGroup("one_aggregate")
+        )
+        assert incremental_append(spark, lh, "ev", batch(1, 2, 3, 4, 5), "ts") == {
+            "appended": 2, "watermark": "2024-01-05 06:00:00"
+        }
+        back = read_path(spark, f"{lh.tables_path}/ev", "parquet")
+        assert sorted(r.id for r in back.collect()) == [1, 2, 3, 4, 5]
+
 
 class TestDeleteRows:
     def test_partitioned_delete(self, spark, sf_dir):

@@ -444,6 +444,118 @@ class TestVacuumOrphans:
         lh = Lakehouse("v", str(tmp_path / "nowhere"))
         assert lio.vacuum_orphans(lh) == []
 
+    def test_remote_root_goes_through_hadoop_fs(self, spark, sf_dir, tmp_path, monkeypatch):
+        """A remote lakehouse (abfss/s3a) has a URI root that ``os`` cannot
+        list; its orphans are listed and removed through the Hadoop
+        FileSystem instead of silently surviving."""
+        import os
+
+        lh = Lakehouse("v", f"file://{tmp_path}")
+        lio.write_table(lh, "nation", lio.load_table(spark, sf_dir, "nation"))
+        orphans = [f"nation__old_{'a' * 32}", f"nation__stage_{'b' * 32}"]
+        for d in orphans:
+            os.makedirs(os.path.join(tmp_path, "Tables", d, "part=1"))
+        monkeypatch.setattr(lio, "_local_path", lambda path: None)
+        expected = [f"{lh.tables_path}/{d}" for d in orphans]
+        assert lio.vacuum_orphans(lh, dry_run=True) == expected
+        assert lio.list_tables(spark, lh) == sorted(["nation", *orphans])
+        assert lio.vacuum_orphans(lh) == expected
+        assert lio.list_tables(spark, lh) == ["nation"]
+        assert lio.vacuum_orphans(lh) == []
+
+
+def _parquet_files(root: str) -> set[str]:
+    import glob
+    import os
+
+    return set(glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True))
+
+
+def _codecs(files: set[str]) -> set[str]:
+    """The compression codec of every column chunk in ``files``."""
+    import pyarrow.parquet as pq
+
+    assert files
+    out = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            out.update(md.row_group(rg).column(i).compression for i in range(md.num_columns))
+    return out
+
+
+class TestZstdFiles:
+    """Every write path follows the session's Parquet codec, which
+    ``get_spark`` sets to zstd. Tables a test seeds itself are written
+    snappy, so a rewrite that kept them would show."""
+
+    @staticmethod
+    def _snappy_table(lh, name, df, partition_by=None):
+        path = f"{lh.tables_path}/{name}"
+        writer = df.write.option("compression", "snappy")
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(path)
+        assert _codecs(_parquet_files(path)) == {"SNAPPY"}
+        return path
+
+    def test_write_table(self, spark, sf_dir):
+        lh = Lakehouse("z", tempfile.mkdtemp())
+        orders = lio.load_table(spark, sf_dir, "orders")
+        lio.write_table(lh, "flat", orders)
+        lio.write_table(lh, "parts", orders, partition_by="o_orderstatus")
+        assert _codecs(_parquet_files(f"{lh.tables_path}/flat")) == {"ZSTD"}
+        assert _codecs(_parquet_files(f"{lh.tables_path}/parts")) == {"ZSTD"}
+
+    def test_partitioned_upsert(self, spark, sf_dir):
+        from ecu_sbl_aace_datalake_spark.sources.incremental import upsert_table
+
+        lh = Lakehouse("z", tempfile.mkdtemp())
+        orders = lio.load_table(spark, sf_dir, "orders")
+        path = self._snappy_table(lh, "orders", orders, partition_by="o_orderstatus")
+        updates = orders.where("o_orderstatus = 'F'").limit(3)
+        upsert_table(spark, lh, "orders", updates, keys=["o_orderkey"], partition_by="o_orderstatus")
+        assert _codecs(_parquet_files(f"{path}/o_orderstatus=F")) == {"ZSTD"}
+        assert _codecs(_parquet_files(f"{path}/o_orderstatus=O")) == {"SNAPPY"}
+
+    def test_unpartitioned_compaction(self, spark, sf_dir):
+        lh = Lakehouse("z", tempfile.mkdtemp())
+        path = self._snappy_table(lh, "orders", lio.load_table(spark, sf_dir, "orders").repartition(4))
+        lio.compact_table(spark, lh, "orders")
+        assert _codecs(_parquet_files(path)) == {"ZSTD"}
+
+    def test_append_table(self, spark, sf_dir):
+        lh = Lakehouse("z", tempfile.mkdtemp())
+        nation = lio.load_table(spark, sf_dir, "nation")
+        path = self._snappy_table(lh, "nation", nation)
+        before = _parquet_files(path)
+        lio.append_table(lh, "nation", nation)
+        assert _codecs(_parquet_files(path) - before) == {"ZSTD"}
+
+    def test_cluster_table(self, spark, sf_dir):
+        lh = Lakehouse("z", tempfile.mkdtemp())
+        path = self._snappy_table(lh, "nation", lio.load_table(spark, sf_dir, "nation"))
+        lio.cluster_table(spark, lh, "nation", by="n_regionkey", n_files=2)
+        assert _codecs(_parquet_files(path)) == {"ZSTD"}
+
+    def test_write_view(self, spark, sf_dir):
+        lh = Lakehouse("z", tempfile.mkdtemp())
+        info = lio.write_view(lh, "nation", lio.load_table(spark, sf_dir, "nation"))
+        assert _codecs(_parquet_files(info["path"])) == {"ZSTD"}
+
+    def test_session_codec_wins(self, spark, sf_dir):
+        """Setting the codec on the session switches writes back to snappy:
+        no writer pins its own codec."""
+        key = "spark.sql.parquet.compression.codec"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "snappy")
+        try:
+            lh = Lakehouse("z", tempfile.mkdtemp())
+            lio.write_table(lh, "nation", lio.load_table(spark, sf_dir, "nation"))
+        finally:
+            spark.conf.set(key, old)
+        assert _codecs(_parquet_files(f"{lh.tables_path}/nation")) == {"SNAPPY"}
+
 
 class TestFunnelAndCohorts:
     def test_funnel_order_sensitivity(self, spark):
