@@ -17,17 +17,17 @@ plain-parquet lakehouse:
   returned stats. Neither writes a table any other way.
 - :func:`incremental_append` — high-watermark ingestion: append only source
   rows newer than the stored watermark; watermark persisted in a JSON
-  sidecar under the table path (the parquet-world stand-in for a streaming
-  checkpoint).
+  sidecar beside the table (``{table}__meta/watermark.json``, the
+  parquet-world stand-in for a streaming checkpoint). The sidecar is read
+  and replaced through the Hadoop FileSystem of the table's URI
+  (``io._read_json`` / ``io._write_json``), so it lives in the lake on any
+  storage, not on the driver's disk.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import posixpath
 from typing import Any
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,8 +36,10 @@ from .catalog import Lakehouse, table_path
 from .io import (
     _in_partitions,
     _partition_values,
+    _read_json,
     _replace_partitions,
     _replace_table,
+    _write_json,
     read_path,
 )
 
@@ -124,12 +126,10 @@ def _watermark_path(lakehouse: Lakehouse, table_name: str) -> str:
 
 
 def get_watermark(lakehouse: Lakehouse, table_name: str) -> str | None:
-    p = _watermark_path(lakehouse, table_name)
-    local = urlparse(p).path or p
-    if os.path.exists(local):
-        with open(local) as f:
-            return json.load(f)["watermark"]
-    return None
+    """The stored high watermark of the table; None before its first
+    append. Read through the active Spark session."""
+    meta = _read_json(SparkSession.active(), _watermark_path(lakehouse, table_name))
+    return None if meta is None else meta["watermark"]
 
 
 def incremental_append(
@@ -154,12 +154,9 @@ def incremental_append(
     new_wm, n = fresh.agg(F.max(ts_col), F.count(F.lit(1))).first()
     if n:
         fresh.write.format("parquet").mode("append").save(path)
-        wm_out = str(new_wm)
-        local_meta = urlparse(_watermark_path(lakehouse, table_name)).path
-        os.makedirs(os.path.dirname(local_meta), exist_ok=True)
-        with open(local_meta, "w") as f:
-            json.dump({"watermark": wm_out}, f)
-    return {"appended": n, "watermark": get_watermark(lakehouse, table_name)}
+        wm = str(new_wm)
+        _write_json(spark, _watermark_path(lakehouse, table_name), {"watermark": wm})
+    return {"appended": n, "watermark": wm}
 
 
 def snapshot_diff(

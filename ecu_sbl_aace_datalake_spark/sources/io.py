@@ -27,8 +27,7 @@ one of two private helpers, the parquet path's stand-in for a Delta commit:
 
 - ``_replace_table`` writes the new table to one staging sibling
   (``{path}__stage_<hex>``) and swaps it in by rename, so readers see the
-  old or the new table, never half of one. Local paths rename through
-  ``os``, remote URIs through the Hadoop FileSystem.
+  old or the new table, never half of one.
 - ``_replace_partitions`` rewrites only the partitions the new rows land in
   (dynamic partition overwrite), one data file per partition, then removes
   the partitions it was told are affected but wrote no rows to. One file
@@ -37,6 +36,12 @@ one of two private helpers, the parquet path's stand-in for a Delta commit:
 
 :func:`vacuum_orphans` collects the staging and backup dirs an interrupted
 swap leaves behind.
+
+Every file operation outside Spark's readers and writers (listing, rename,
+delete, the JSON sidecars of ``incremental`` and ``versioned``) goes
+through the Hadoop FileSystem of the URI, in the private helpers below, so
+a local path, ``file://``, ``abfss://``, ``s3a://`` and ``hdfs://`` all
+take the same code.
 
 Scale notes:
 - ``write_table(partition_by=...)`` controls physical layout → later reads
@@ -51,16 +56,14 @@ Scale notes:
 
 from __future__ import annotations
 
+import json
 import math
-import os
 import posixpath
 import re
-import shutil
 import uuid
 from collections import Counter
 from collections.abc import Iterator
 from typing import Any
-from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,27 +93,54 @@ def _as_list(cols: str | list[str]) -> list[str]:
     return [cols] if isinstance(cols, str) else list(cols)
 
 
-def _local_path(path: str) -> str | None:
-    """Driver-local filesystem path of ``path``; None for a remote URI."""
-    parsed = urlparse(path)
-    return (parsed.path or path) if parsed.scheme in ("", "file") else None
-
-
 def _hadoop(spark: SparkSession, path: str) -> tuple[Any, Any]:
     """(Hadoop FileSystem, Hadoop Path) for any storage URI."""
     hp = spark._jvm.org.apache.hadoop.fs.Path(path)
     return hp.getFileSystem(spark._jsc.hadoopConfiguration()), hp
 
 
-def _remove(spark: SparkSession | None, path: str) -> None:
-    """Recursively delete ``path``; a missing path is not an error. A local
-    path needs no ``spark``."""
-    local = _local_path(path)
-    if local is not None:
-        shutil.rmtree(local, ignore_errors=True)
-    else:
-        fs, hp = _hadoop(spark, path)
-        fs.delete(hp, True)
+def _remove(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path``; a missing path is not an error."""
+    fs, hp = _hadoop(spark, path)
+    fs.delete(hp, True)
+
+
+def _read_json(spark: SparkSession, path: str) -> Any:
+    """The JSON value stored at ``path``; None when there is no file."""
+    fs, hp = _hadoop(spark, path)
+    if not fs.exists(hp):
+        return None
+    stream = fs.open(hp)
+    try:
+        # IOUtils, not InputStream.readAllBytes: that needs Java 9
+        data = spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream)
+    finally:
+        stream.close()
+    return json.loads(bytes(data))
+
+
+def _write_json(spark: SparkSession, path: str, obj: Any) -> None:
+    """Store ``obj`` as JSON at ``path``: write ``{path}.tmp``, then rename
+    it over ``path`` with ``FileContext.rename(..., OVERWRITE)``, so a
+    reader never sees a partial file. The replace is atomic only where the
+    file system renames over a file itself (HDFS): Hadoop's default, which
+    the local FS takes, deletes the old file and then renames, so a reader
+    between the two finds no file."""
+    jvm = spark._jvm
+    fs, hp = _hadoop(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(json.dumps(obj).encode())
+    finally:
+        out.close()
+    rename = getattr(jvm.org.apache.hadoop.fs, "Options$Rename")
+    overwrite = spark.sparkContext._gateway.new_array(rename, 1)
+    overwrite[0] = rename.OVERWRITE
+    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        hp.toUri(), spark._jsc.hadoopConfiguration()
+    )
+    fc.rename(tmp, hp, overwrite)
 
 
 def _replace_table(
@@ -129,17 +159,12 @@ def _replace_table(
     if partition_by:
         writer = writer.partitionBy(*_as_list(partition_by))
     writer.save(stage)
-    local = _local_path(path)
-    if local is not None:
-        os.rename(local, _local_path(back))
-        os.rename(_local_path(stage), local)
-    else:
-        # Hadoop FS reports a failed rename by returning False, not raising;
-        # renaming the stage onto a path that still exists would nest it
-        fs, hp = _hadoop(spark, path)
-        Path = spark._jvm.org.apache.hadoop.fs.Path
-        if not (fs.rename(hp, Path(back)) and fs.rename(Path(stage), hp)):
-            raise OSError(f"could not swap {stage} into {path}")
+    # Hadoop FS reports a failed rename by returning False, not raising;
+    # renaming the stage onto a path that still exists would nest it
+    fs, hp = _hadoop(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    if not (fs.rename(hp, Path(back)) and fs.rename(Path(stage), hp)):
+        raise OSError(f"could not swap {stage} into {path}")
     _remove(spark, back)
 
 
@@ -212,8 +237,7 @@ def read_path(spark: SparkSession, path: str, fmt: str = DEFAULT_FORMAT) -> Data
 
 def path_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop FileSystem API — correct for ANY
-    storage URI (abfss/s3/hdfs/file). ``os.path`` checks only see the
-    driver-local filesystem and silently return False for remote tables."""
+    storage URI (abfss/s3/hdfs/file)."""
     fs, hp = _hadoop(spark, path)
     return bool(fs.exists(hp))
 
@@ -221,6 +245,16 @@ def path_exists(spark: SparkSession, path: str) -> bool:
 def table_exists(spark: SparkSession, lakehouse: Lakehouse, table_name: str) -> bool:
     """Whether ``{lakehouse}/Tables/{table_name}`` exists in storage."""
     return path_exists(spark, table_path(lakehouse, table_name))
+
+
+def _select(spark: SparkSession, path: str, name: str, query: str | None, fmt: str) -> DataFrame:
+    """Load ``path``, register it as a unique temp view named after
+    ``name`` and run ``query`` over it (reference ``__selectTable``)."""
+    from ..operators.query import temp_table_name
+
+    view = temp_table_name(name)
+    read_path(spark, path, fmt).createOrReplaceTempView(view)
+    return spark.sql((query or "SELECT t.* FROM {table} AS t").format(table=view))
 
 
 def select_table(
@@ -236,13 +270,7 @@ def select_table(
     Reference: ``selectTable``/``__selectTable`` common.py:440-467. The
     query's view placeholder is ``{table}``.
     """
-    from ..operators.query import temp_table_name
-
-    df = read_path(spark, table_path(lakehouse, table_name), fmt)
-    view = temp_table_name(table_name)
-    df.createOrReplaceTempView(view)
-    sql = (query or "SELECT t.* FROM {table} AS t").format(table=view)
-    return spark.sql(sql)
+    return _select(spark, table_path(lakehouse, table_name), table_name, query, fmt)
 
 
 def select_view(
@@ -253,13 +281,7 @@ def select_view(
     fmt: str = DEFAULT_FORMAT,
 ) -> DataFrame:
     """Same as :func:`select_table` under ``/Views/`` (common.py:461-462)."""
-    from ..operators.query import temp_table_name
-
-    df = read_path(spark, view_path(lakehouse, view_name), fmt)
-    view = temp_table_name(view_name)
-    df.createOrReplaceTempView(view)
-    sql = (query or "SELECT t.* FROM {table} AS t").format(table=view)
-    return spark.sql(sql)
+    return _select(spark, view_path(lakehouse, view_name), view_name, query, fmt)
 
 
 def read_table(
@@ -341,10 +363,8 @@ def write_view(
 
 def drop_table(spark: SparkSession, lakehouse: Lakehouse, table_name: str, fmt: str = DEFAULT_FORMAT) -> None:
     """Actually drop the table (reference bug #2: ``dropTable``
-    common.py:512-517 only row-deletes and crashes without a spark arg).
-
-    For local paths the directory is removed; for remote URIs the Hadoop
-    FileSystem API is used via the JVM gateway.
+    common.py:512-517 only row-deletes and crashes without a spark arg):
+    its directory is removed through the Hadoop FileSystem of its URI.
     """
     _remove(spark, table_path(lakehouse, table_name))
 
@@ -356,15 +376,9 @@ def list_tables(spark: SparkSession, lakehouse: Lakehouse) -> list[str]:
     return _subdirs(spark, lakehouse.tables_path)
 
 
-def _subdirs(spark: SparkSession | None, root: str) -> list[str]:
+def _subdirs(spark: SparkSession, root: str) -> list[str]:
     """Sorted names of the dirs directly under ``root`` ([] when ``root``
-    is missing): ``os`` for a local path, else the Hadoop FileSystem, which
-    needs ``spark``."""
-    local = _local_path(root)
-    if local is not None:
-        if not os.path.isdir(local):
-            return []
-        return sorted(d for d in os.listdir(local) if os.path.isdir(os.path.join(local, d)))
+    is missing)."""
     fs, hp = _hadoop(spark, root)
     if not fs.exists(hp):
         return []
@@ -453,24 +467,21 @@ def _hidden(name: str) -> bool:
 def _data_files(spark: SparkSession, root: str) -> Iterator[tuple[str, int]]:
     """(path relative to ``root``, size) of every data file under ``root``,
     as a read of it sees them: no file or dir below ``root`` with a hidden
-    name."""
-    local = _local_path(root)
-    if local is not None:
-        for dirpath, dirs, files in os.walk(local):
-            dirs[:] = [d for d in dirs if not _hidden(d)]
-            for f in files:
-                if not _hidden(f):
-                    full = os.path.join(dirpath, f)
-                    yield os.path.relpath(full, local), os.path.getsize(full)
-        return
+    name. A ``listStatus`` walk: ``listFiles(recursive)`` would also look
+    up the block locations of every file."""
     fs, hp = _hadoop(spark, root)
-    prefix = fs.makeQualified(hp).toString().rstrip("/") + "/"
-    it = fs.listFiles(hp, True)
-    while it.hasNext():
-        st = it.next()
-        rel = st.getPath().toString()[len(prefix):]
-        if not any(_hidden(part) for part in rel.split("/")):
-            yield rel, st.getLen()
+    dirs = [(hp, "")]
+    while dirs:
+        d, rel = dirs.pop()
+        for st in fs.listStatus(d):
+            p = st.getPath()
+            name = p.getName()
+            if _hidden(name):
+                continue
+            if st.isDirectory():
+                dirs.append((p, f"{rel}{name}/"))
+            else:
+                yield rel + name, st.getLen()
 
 
 def _file_stats(files: list[tuple[str, int]]) -> dict[str, Any]:
@@ -766,17 +777,16 @@ def vacuum_orphans(lakehouse: Lakehouse, dry_run: bool = False) -> list[str]:
     leave behind (the swap itself is atomic; the cleanup after it isn't).
 
     The VACUUM of this engine's parquet path (Delta has its own). Matches
-    ONLY the engine's own suffix conventions — never user tables. Returns
-    the removed (or, with ``dry_run``, would-be-removed) paths: local paths
-    for a local lakehouse; for a remote one (``abfss://``, ``s3a://``) the
-    URIs, listed and removed through the Hadoop FileSystem of the active
-    Spark session.
+    ONLY the engine's own suffix conventions — never user tables. Lists
+    and removes through the Hadoop FileSystem of the active Spark session.
+    Returns the removed (or, with ``dry_run``, would-be-removed) paths,
+    joined onto ``lakehouse.tables_path`` as given: a ``file://`` or
+    ``abfss://`` lakehouse gets URIs.
     """
     pat = re.compile(f"({'|'.join(_ORPHAN_MARKERS)})[0-9a-f]{{32}}$")
     root = lakehouse.tables_path
-    local = _local_path(root)
-    spark = None if local is not None else SparkSession.active()
-    removed = [posixpath.join(local or root, d) for d in _subdirs(spark, root) if pat.search(d)]
+    spark = SparkSession.active()
+    removed = [posixpath.join(root, d) for d in _subdirs(spark, root) if pat.search(d)]
     if not dry_run:
         for full in removed:
             _remove(spark, full)

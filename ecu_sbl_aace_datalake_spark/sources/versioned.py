@@ -12,8 +12,14 @@ tree:
 - each write lands in a NEW immutable directory ``_v{n}/`` (never
   rewritten, so concurrent readers of older versions are safe);
 - ``_manifest.json`` is the single mutable pointer: replacing it is the
-  commit. On a POSIX/ object-store rename this is the same atomicity
-  unit Delta's log append relies on;
+  commit. It is read and replaced through the Hadoop FileSystem of the
+  table's URI (``io._read_json`` / ``io._write_json``: a temp file, then
+  ``FileContext.rename`` with ``OVERWRITE``), so any driver on any storage
+  resolves the same history. A reader never sees a partial manifest. The
+  replace is atomic only where the file system renames over a file itself
+  (HDFS): Hadoop's default, which the local FS takes, deletes the old
+  manifest and then renames, so a reader between the two finds no table,
+  and a crash between them loses the pointer;
 - reads resolve the manifest (optionally pinned to a version or a
   timestamp) and scan only that version's directory;
 - ``vacuum`` drops versions beyond a retention count, exactly like
@@ -28,44 +34,24 @@ parquet reader per version directory.
 
 from __future__ import annotations
 
-import json
 import time
 from typing import Any
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Lakehouse, table_path
-from .io import DEFAULT_FORMAT, read_path
+from .io import DEFAULT_FORMAT, _as_list, _read_json, _remove, _write_json, read_path
 
 MANIFEST = "_manifest.json"
 
 
-def _local(path: str) -> str:
-    parsed = urlparse(path)
-    return parsed.path if parsed.scheme in ("", "file") else path
+def _read_manifest(spark: SparkSession, root: str) -> dict | None:
+    return _read_json(spark, f"{root}/{MANIFEST}")
 
 
-def _read_manifest(spark: SparkSession, path: str) -> dict | None:
-    import os
-
-    p = _local(f"{path}/{MANIFEST}")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_manifest(path: str, manifest: dict) -> None:
-    import os
-
-    os.makedirs(_local(path), exist_ok=True)
-    tmp = _local(f"{path}/{MANIFEST}.tmp")
-    dst = _local(f"{path}/{MANIFEST}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    # atomic pointer swap — the commit
-    os.replace(tmp, dst)
+def _write_manifest(spark: SparkSession, root: str, manifest: dict) -> None:
+    # the pointer swap is the commit
+    _write_json(spark, f"{root}/{MANIFEST}", manifest)
 
 
 def write_table_versioned(
@@ -79,8 +65,9 @@ def write_table_versioned(
     """Commit a new snapshot version of the table. Returns the commit info
     (version, path, timestamp). ``commit_ts`` defaults to the wall clock;
     pass it explicitly for reproducible histories in tests."""
+    spark = df.sparkSession
     root = table_path(lakehouse, table_name)
-    manifest = _read_manifest(df.sparkSession, root) or {
+    manifest = _read_manifest(spark, root) or {
         "table": table_name,
         "format": fmt,
         "versions": [],
@@ -91,12 +78,7 @@ def write_table_versioned(
     vdir = f"{root}/_v{version}"
     writer = df.write.format(fmt).mode("overwrite")
     if partition_by:
-        cols = (
-            [partition_by]
-            if isinstance(partition_by, str)
-            else list(partition_by)
-        )
-        writer = writer.partitionBy(*cols)
+        writer = writer.partitionBy(*_as_list(partition_by))
     writer.save(vdir)
     entry = {
         "version": version,
@@ -106,7 +88,7 @@ def write_table_versioned(
         "columns": list(df.columns),
     }
     manifest["versions"].append(entry)
-    _write_manifest(root, manifest)
+    _write_manifest(spark, root, manifest)
     return {"table": table_name, "path": vdir, **entry}
 
 
@@ -166,8 +148,6 @@ def vacuum_table(
     """Drop all but the newest ``keep_last`` versions (data + manifest
     entries). Returns the dropped version numbers. The manifest commit
     happens FIRST so a reader can never resolve a deleted directory."""
-    import shutil
-
     root = table_path(lakehouse, table_name)
     manifest = _read_manifest(spark, root)
     if manifest is None:
@@ -177,7 +157,7 @@ def vacuum_table(
         return []
     drop, keep = entries[:-keep_last], entries[-keep_last:]
     manifest["versions"] = keep
-    _write_manifest(root, manifest)
+    _write_manifest(spark, root, manifest)
     for e in drop:
-        shutil.rmtree(_local(f"{root}/{e['dir']}"), ignore_errors=True)
+        _remove(spark, f"{root}/{e['dir']}")
     return [e["version"] for e in drop]

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -18,3 +20,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def viewfs_lakehouse(spark, tmp_path, monkeypatch):
+    """``(lakehouse, target)``: a lakehouse on a ``viewfs://`` mount table,
+    a real non-``file`` URI scheme, whose files land in the local dir
+    ``target``. The mount link is ``{tmp_path}/lake`` and the test runs in
+    ``tmp_path``, so code that takes the URI for a local path writes
+    under ``tmp_path`` too, never into the lake."""
+    from ecu_sbl_aace_datalake_spark.sources.catalog import Lakehouse
+
+    name = f"lake{uuid.uuid4().hex}"  # a fresh FileSystem cache key per test
+    link = f"{tmp_path}/lake"
+    target = tmp_path / "target"
+    target.mkdir()
+    key = f"fs.viewfs.mounttable.{name}.link.{link}"
+    conf = spark._jsc.hadoopConfiguration()
+    conf.set(key, target.as_uri())
+    monkeypatch.chdir(tmp_path)
+    yield Lakehouse("viewfs", f"viewfs://{name}{link}"), target
+    conf.unset(key)

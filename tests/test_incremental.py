@@ -97,6 +97,24 @@ class TestIncrementalAppend:
         )
         assert distinct_ids == total
 
+    def test_watermark_lives_in_the_lake(self, spark, viewfs_lakehouse, tmp_path, monkeypatch):
+        """On a remote URI the watermark sidecar is stored beside the table
+        in the lake, so a driver in another working dir appends nothing
+        the first one appended."""
+        lh, target = viewfs_lakehouse
+        src = spark.createDataFrame(
+            [(d, datetime.datetime(2024, 1, d)) for d in (1, 2, 3)], "id long, ts timestamp"
+        )
+        assert incremental_append(spark, lh, "ev", src, "ts")["appended"] == 3
+        assert (target / "Tables" / "ev__meta" / "watermark.json").is_file()
+        elsewhere = tmp_path / "elsewhere"
+        elsewhere.mkdir()
+        monkeypatch.chdir(elsewhere)
+        assert incremental_append(spark, lh, "ev", src, "ts") == {
+            "appended": 0, "watermark": "2024-01-03 00:00:00"
+        }
+        assert read_path(spark, f"{lh.tables_path}/ev", "parquet").count() == 3
+
     def test_watermark_and_count_from_one_job(self, spark):
         """The new watermark and the appended count come from one aggregate
         over the fresh rows: same results on a first call, a repeat call
@@ -315,16 +333,13 @@ class TestPartitionKeyChange:
         back = read_path(spark, table_dir, "parquet")
         assert Counter((r.id, r.part, r.v) for r in back.collect()) == expected
 
-    def test_rewrites_through_hadoop_fs(self, spark, monkeypatch):
-        """The swap and the stale-partition removal also work through the
-        Hadoop FileSystem, the path every remote URI (abfss/s3) takes."""
-        import tempfile
-
+    def test_rewrites_through_hadoop_fs(self, spark, viewfs_lakehouse):
+        """The swap and the stale-partition removal also work on a remote
+        URI (abfss/s3), through its Hadoop FileSystem."""
         from ecu_sbl_aace_datalake_spark.sources import io
         from ecu_sbl_aace_datalake_spark.sources.incremental import delete_rows
 
-        monkeypatch.setattr(io, "_local_path", lambda path: None)
-        lh = Lakehouse("hfs", tempfile.mkdtemp())
+        lh, _target = viewfs_lakehouse
         df = spark.createDataFrame([(1, "A"), (2, "B")], "id long, part string")
         write_table(lh, "flat", df)
         write_table(lh, "parts", df, partition_by="part")
@@ -361,22 +376,25 @@ class TestPartitionedCompaction:
         assert back.count() == orders.count()
         assert "o_orderstatus" in back.columns
 
-    @pytest.mark.parametrize("hadoop_fs", [False, True], ids=["local", "hadoop_fs"])
-    def test_rewrites_only_fragmented_partitions(self, spark, sf_dir, monkeypatch, hadoop_fs):
+    @pytest.mark.parametrize("viewfs", [False, True], ids=["local", "viewfs"])
+    def test_rewrites_only_fragmented_partitions(self, spark, sf_dir, request, viewfs):
         """Compact partitions keep their files; a second compaction of the
         now compact table writes nothing."""
         from ecu_sbl_aace_datalake_spark.sources import io
 
-        if hadoop_fs:  # list and read through the Hadoop FileSystem
-            monkeypatch.setattr(io, "_local_path", lambda path: None)
-        lh = Lakehouse("frag", tempfile.mkdtemp())
-        table_dir = f"{lh.tables_path}/orders"
+        if viewfs:  # a remote URI, backed by a local dir
+            lh, target = request.getfixturevalue("viewfs_lakehouse")
+            table_dir = str(target / "Tables" / "orders")
+        else:
+            lh = Lakehouse("frag", tempfile.mkdtemp())
+            table_dir = f"{lh.tables_path}/orders"
+        table_uri = f"{lh.tables_path}/orders"
         orders = load_table(spark, sf_dir, "orders")
-        orders.repartition("o_orderstatus").write.partitionBy("o_orderstatus").parquet(table_dir)
+        orders.repartition("o_orderstatus").write.partitionBy("o_orderstatus").parquet(table_uri)
         extra = orders.where("o_orderstatus = 'P'").withColumn(
             "o_orderkey", F.col("o_orderkey") + 10_000_000
         )
-        extra.coalesce(1).write.mode("append").partitionBy("o_orderstatus").parquet(table_dir)
+        extra.coalesce(1).write.mode("append").partitionBy("o_orderstatus").parquet(table_uri)
         before = _files_per_partition(table_dir)
         assert {d: len(f) for d, f in before.items()} == {
             "o_orderstatus=F": 1, "o_orderstatus=O": 1, "o_orderstatus=P": 2
@@ -386,18 +404,46 @@ class TestPartitionedCompaction:
         os.makedirs(stale)
         for f in before["o_orderstatus=P"]:
             shutil.copy(os.path.join(table_dir, "o_orderstatus=P", f), stale)
-        rows = Counter(read_path(spark, table_dir, "parquet").collect())
+        rows = Counter(read_path(spark, table_uri, "parquet").collect())
 
         io.compact_table(spark, lh, "orders", partition_by="o_orderstatus")
         after = _files_per_partition(table_dir)
         assert after["o_orderstatus=F"] == before["o_orderstatus=F"]
         assert after["o_orderstatus=O"] == before["o_orderstatus=O"]
         assert len(after["o_orderstatus=P"]) == 1
-        assert Counter(read_path(spark, table_dir, "parquet").collect()) == rows
+        assert Counter(read_path(spark, table_uri, "parquet").collect()) == rows
 
         stats = io.compact_table(spark, lh, "orders", partition_by="o_orderstatus")
         assert _files_per_partition(table_dir) == after
         assert stats["after"] == stats["before"]
+
+    @pytest.mark.parametrize("value", ["a:b", None], ids=["escaped", "null"])
+    def test_compacts_partitions_spark_names_specially(self, spark, viewfs_lakehouse, value):
+        """The listing finds a partition whose dir name Spark escapes
+        (``part=a%3Ab``) or the null partition's
+        (``part=__HIVE_DEFAULT_PARTITION__``), and compacts it to one file
+        with its rows."""
+        from ecu_sbl_aace_datalake_spark.sources.io import compact_table
+
+        lh, target = viewfs_lakehouse
+        table_uri = f"{lh.tables_path}/t"
+        schema = "id long, part string"
+        spark.createDataFrame([(1, value), (2, "c")], schema).coalesce(1).write.partitionBy(
+            "part"
+        ).parquet(table_uri)
+        spark.createDataFrame([(3, value)], schema).coalesce(1).write.mode("append").partitionBy(
+            "part"
+        ).parquet(table_uri)
+        name = "part=a%3Ab" if value else "part=__HIVE_DEFAULT_PARTITION__"
+        table_dir = str(target / "Tables" / "t")
+        before = _files_per_partition(table_dir)
+        assert {d: len(f) for d, f in before.items()} == {name: 2, "part=c": 1}
+        compact_table(spark, lh, "t", partition_by="part")
+        after = _files_per_partition(table_dir)
+        assert {d: len(f) for d, f in after.items()} == {name: 1, "part=c": 1}
+        assert after["part=c"] == before["part=c"]
+        back = read_path(spark, table_uri, "parquet")
+        assert sorted(tuple(r) for r in back.collect()) == [(1, value), (2, "c"), (3, value)]
 
     def test_partition_types_come_from_the_whole_table(self, spark):
         """Read alone, dir ``part=007`` would type ``part`` as an int and be

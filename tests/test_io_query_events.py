@@ -424,11 +424,26 @@ class TestVacuumOrphans:
 
         lh = Lakehouse("v", str(tmp_path))
         lio.write_table(lh, "nation", lio.load_table(spark, sf_dir, "nation"))
+        hadoop = lio._hadoop
 
-        def crash(*_args):
-            raise OSError("interrupted before the swap")
+        class CrashOnRename:
+            """A Hadoop FileSystem whose renames die, as a driver killed
+            before the swap would."""
 
-        monkeypatch.setattr(os, "rename", crash)
+            def __init__(self, fs):
+                self._fs = fs
+
+            def __getattr__(self, name):
+                return getattr(self._fs, name)
+
+            def rename(self, *_args):
+                raise OSError("interrupted before the swap")
+
+        def crashing_hadoop(spark, path):
+            fs, hp = hadoop(spark, path)
+            return CrashOnRename(fs), hp
+
+        monkeypatch.setattr(lio, "_hadoop", crashing_hadoop)
         with pytest.raises(OSError, match="interrupted"):
             lio.compact_table(spark, lh, "nation")
         monkeypatch.undo()
@@ -440,27 +455,27 @@ class TestVacuumOrphans:
         assert sorted(os.listdir(lh.tables_path)) == ["nation"]
         assert lio.read_path(spark, f"{lh.tables_path}/nation", "parquet").count() == 25
 
-    def test_noop_on_missing_root(self, tmp_path):
+    def test_noop_on_missing_root(self, spark, tmp_path):
         lh = Lakehouse("v", str(tmp_path / "nowhere"))
         assert lio.vacuum_orphans(lh) == []
 
-    def test_remote_root_goes_through_hadoop_fs(self, spark, sf_dir, tmp_path, monkeypatch):
+    def test_remote_root_goes_through_hadoop_fs(self, spark, sf_dir, viewfs_lakehouse):
         """A remote lakehouse (abfss/s3a) has a URI root that ``os`` cannot
         list; its orphans are listed and removed through the Hadoop
-        FileSystem instead of silently surviving."""
+        FileSystem instead of silently surviving, and named by URI."""
         import os
 
-        lh = Lakehouse("v", f"file://{tmp_path}")
+        lh, target = viewfs_lakehouse
         lio.write_table(lh, "nation", lio.load_table(spark, sf_dir, "nation"))
         orphans = [f"nation__old_{'a' * 32}", f"nation__stage_{'b' * 32}"]
         for d in orphans:
-            os.makedirs(os.path.join(tmp_path, "Tables", d, "part=1"))
-        monkeypatch.setattr(lio, "_local_path", lambda path: None)
+            os.makedirs(os.path.join(target, "Tables", d, "part=1"))
         expected = [f"{lh.tables_path}/{d}" for d in orphans]
         assert lio.vacuum_orphans(lh, dry_run=True) == expected
         assert lio.list_tables(spark, lh) == sorted(["nation", *orphans])
         assert lio.vacuum_orphans(lh) == expected
         assert lio.list_tables(spark, lh) == ["nation"]
+        assert os.listdir(os.path.join(target, "Tables")) == ["nation"]
         assert lio.vacuum_orphans(lh) == []
 
 
@@ -683,6 +698,41 @@ class TestVersionedTables:
             == nation.count()
         with pytest.raises(ValueError, match="vacuumed or never"):
             V.read_table_versioned(spark, lh, "nation", version=0)
+
+    def test_history_lives_in_the_lake(self, spark, sf_dir, viewfs_lakehouse, tmp_path, monkeypatch):
+        """On a remote URI the manifest is stored beside the versions in
+        the lake: a table written in one working dir reads back, by
+        version and by timestamp, from another."""
+        from ecu_sbl_aace_datalake_spark.sources import versioned as V
+        from ecu_sbl_aace_datalake_spark.sources.io import load_table
+
+        lh, _target = viewfs_lakehouse
+        nation = load_table(spark, sf_dir, "nation")
+        V.write_table_versioned(lh, "nation", nation, commit_ts=100.0)
+        V.write_table_versioned(lh, "nation", nation.limit(1), commit_ts=200.0)
+        elsewhere = tmp_path / "elsewhere"
+        elsewhere.mkdir()
+        monkeypatch.chdir(elsewhere)
+        assert V.read_table_versioned(spark, lh, "nation", version=0).count() == 25
+        assert V.read_table_versioned(spark, lh, "nation", timestamp=150.0).count() == 25
+        assert V.read_table_versioned(spark, lh, "nation", timestamp=250.0).count() == 1
+        assert [h["version"] for h in V.table_history(spark, lh, "nation")] == [0, 1]
+
+    def test_vacuum_deletes_dropped_versions_in_the_lake(self, spark, sf_dir, viewfs_lakehouse):
+        """On a remote URI a vacuumed version's data is removed from
+        storage, not left behind."""
+        from ecu_sbl_aace_datalake_spark.sources import versioned as V
+        from ecu_sbl_aace_datalake_spark.sources.io import load_table
+
+        lh, target = viewfs_lakehouse
+        nation = load_table(spark, sf_dir, "nation")
+        for ts in (1.0, 2.0, 3.0):
+            V.write_table_versioned(lh, "nation", nation, commit_ts=ts)
+        table = target / "Tables" / "nation"
+        assert (table / "_v0").is_dir()
+        assert V.vacuum_table(spark, lh, "nation", keep_last=2) == [0]
+        assert not (table / "_v0").exists()
+        assert (table / "_v1").is_dir() and (table / "_v2").is_dir()
 
     def test_errors(self, spark, sf_dir):
         import pytest
