@@ -16,12 +16,12 @@ plain-parquet lakehouse:
   ``io._replace_table``'s staged write and rename swap, flagged in the
   returned stats. Neither writes a table any other way.
 - :func:`incremental_append` — high-watermark ingestion: append only source
-  rows newer than the stored watermark; watermark persisted in a JSON
-  sidecar beside the table (``{table}__meta/watermark.json``, the
-  parquet-world stand-in for a streaming checkpoint). The sidecar is read
-  and replaced through the Hadoop FileSystem of the table's URI
-  (``io._read_json`` / ``io._write_json``), so it lives in the lake on any
-  storage, not on the driver's disk.
+  rows newer than the stored watermark; watermark persisted beside the
+  table (the parquet-world stand-in for a streaming checkpoint) in the JSON
+  log ``{table}__meta/watermark/`` (``io._log_head`` / ``io._log_commit``),
+  in the lake on any storage. A crash leaves the old watermark or the new
+  one, never none; one from before the log, ``watermark.json``, is read
+  until the next append.
 """
 
 from __future__ import annotations
@@ -35,11 +35,11 @@ from pyspark.sql import functions as F
 from .catalog import Lakehouse, table_path
 from .io import (
     _in_partitions,
+    _log_commit,
+    _log_head,
     _partition_values,
-    _read_json,
     _replace_partitions,
     _replace_table,
-    _write_json,
     read_path,
 )
 
@@ -121,14 +121,14 @@ def delete_rows(
     return {"mode": "dynamic-partition", "partitions_rewritten": len(affected)}
 
 
-def _watermark_path(lakehouse: Lakehouse, table_name: str) -> str:
-    return posixpath.join(table_path(lakehouse, table_name) + "__meta", "watermark.json")
+def _watermark_log(lakehouse: Lakehouse, table_name: str) -> str:
+    return posixpath.join(table_path(lakehouse, table_name) + "__meta", "watermark")
 
 
 def get_watermark(lakehouse: Lakehouse, table_name: str) -> str | None:
     """The stored high watermark of the table; None before its first
     append. Read through the active Spark session."""
-    meta = _read_json(SparkSession.active(), _watermark_path(lakehouse, table_name))
+    _n, meta = _log_head(SparkSession.active(), _watermark_log(lakehouse, table_name))
     return None if meta is None else meta["watermark"]
 
 
@@ -145,17 +145,20 @@ def incremental_append(
     Idempotent between watermark advances: re-running with an unchanged
     source appends nothing. (Exactly-once under concurrent writers needs a
     transactional log — Delta/Iceberg territory; this is the single-writer
-    batch pattern.)
+    batch pattern.) A crash between the append and the watermark commit
+    leaves the old watermark, so the next call appends those rows again.
     """
     path = table_path(lakehouse, table_name)
-    wm = get_watermark(lakehouse, table_name)
+    log = _watermark_log(lakehouse, table_name)
+    head, meta = _log_head(spark, log)
+    wm = None if meta is None else meta["watermark"]
     fresh = source if wm is None else source.where(F.col(ts_col) > F.lit(wm))
     # the new watermark and the row count in one job over ``fresh``
     new_wm, n = fresh.agg(F.max(ts_col), F.count(F.lit(1))).first()
     if n:
         fresh.write.format("parquet").mode("append").save(path)
         wm = str(new_wm)
-        _write_json(spark, _watermark_path(lakehouse, table_name), {"watermark": wm})
+        _log_commit(spark, log, head + 1, {"watermark": wm})
     return {"appended": n, "watermark": wm}
 
 

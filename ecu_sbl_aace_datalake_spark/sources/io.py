@@ -38,10 +38,10 @@ one of two private helpers, the parquet path's stand-in for a Delta commit:
 swap leaves behind.
 
 Every file operation outside Spark's readers and writers (listing, rename,
-delete, the JSON sidecars of ``incremental`` and ``versioned``) goes
-through the Hadoop FileSystem of the URI, in the private helpers below, so
-a local path, ``file://``, ``abfss://``, ``s3a://`` and ``hdfs://`` all
-take the same code.
+delete, the JSON logs of ``incremental`` and ``versioned``) goes through
+the Hadoop FileSystem of the URI, in the private helpers below, so a local
+path, ``file://``, ``abfss://``, ``s3a://`` and ``hdfs://`` all take the
+same code.
 
 Scale notes:
 - ``write_table(partition_by=...)`` controls physical layout → later reads
@@ -106,10 +106,8 @@ def _remove(spark: SparkSession, path: str) -> None:
 
 
 def _read_json(spark: SparkSession, path: str) -> Any:
-    """The JSON value stored at ``path``; None when there is no file."""
+    """The JSON value stored in the file at ``path``."""
     fs, hp = _hadoop(spark, path)
-    if not fs.exists(hp):
-        return None
     stream = fs.open(hp)
     try:
         # IOUtils, not InputStream.readAllBytes: that needs Java 9
@@ -119,28 +117,44 @@ def _read_json(spark: SparkSession, path: str) -> Any:
     return json.loads(bytes(data))
 
 
-def _write_json(spark: SparkSession, path: str, obj: Any) -> None:
-    """Store ``obj`` as JSON at ``path``: write ``{path}.tmp``, then rename
-    it over ``path`` with ``FileContext.rename(..., OVERWRITE)``, so a
-    reader never sees a partial file. The replace is atomic only where the
-    file system renames over a file itself (HDFS): Hadoop's default, which
-    the local FS takes, deletes the old file and then renames, so a reader
-    between the two finds no file."""
-    jvm = spark._jvm
-    fs, hp = _hadoop(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
+_LOG_ENTRY = re.compile(r"[0-9]{20}\.json")
+
+
+def _log_head(spark: SparkSession, log: str) -> tuple[int, Any]:
+    """``(n, value)`` of the newest entry of the JSON log in dir ``log``.
+    A log with no entry reads as ``(-1, value)`` of the file ``{log}.json``,
+    the single file earlier versions replaced in place, else ``(-1, None)``."""
+    fs, hp = _hadoop(spark, log)
+    names = [st.getPath().getName() for st in fs.listStatus(hp)] if fs.exists(hp) else []
+    head = max(filter(_LOG_ENTRY.fullmatch, names), default=None)
+    if head is not None:
+        return int(head[:20]), _read_json(spark, posixpath.join(log, head))
+    legacy = f"{log}.json"
+    return -1, _read_json(spark, legacy) if path_exists(spark, legacy) else None
+
+
+def _log_commit(spark: SparkSession, log: str, n: int, obj: Any) -> None:
+    """Commit ``obj`` as entry ``n`` of the JSON log in dir ``log``: write a
+    temp file, then rename it to the entry's name, which no file has yet.
+    A reader sees the whole entry or none, and a crash before the rename
+    leaves the previous head. No file is replaced: Hadoop replaces one by a
+    delete, then a rename, with no file in between. A rename onto an
+    existing entry (another writer's) fails, and then this raises.
+    Entry ``n - 2`` is then removed; the one before the new head stays for
+    a reader that listed the log just before this commit."""
+    fs, hp = _hadoop(spark, log)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp = Path(hp, f"{n:020}.{uuid.uuid4().hex}.tmp")
     out = fs.create(tmp, True)
     try:
         out.write(json.dumps(obj).encode())
     finally:
         out.close()
-    rename = getattr(jvm.org.apache.hadoop.fs, "Options$Rename")
-    overwrite = spark.sparkContext._gateway.new_array(rename, 1)
-    overwrite[0] = rename.OVERWRITE
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        hp.toUri(), spark._jsc.hadoopConfiguration()
-    )
-    fc.rename(tmp, hp, overwrite)
+    if not fs.rename(tmp, Path(hp, f"{n:020}.json")):
+        fs.delete(tmp, False)
+        raise OSError(f"entry {n} of {log} exists: another writer committed first")
+    if n >= 2:
+        fs.delete(Path(hp, f"{n - 2:020}.json"), False)
 
 
 def _replace_table(
@@ -467,10 +481,10 @@ def _hidden(name: str) -> bool:
 def _data_files(spark: SparkSession, root: str) -> Iterator[tuple[str, int]]:
     """(path relative to ``root``, size) of every data file under ``root``,
     as a read of it sees them: no file or dir below ``root`` with a hidden
-    name. A ``listStatus`` walk: ``listFiles(recursive)`` would also look
-    up the block locations of every file."""
+    name; nothing for a missing ``root``. A ``listStatus`` walk:
+    ``listFiles(recursive)`` also looks up every file's block locations."""
     fs, hp = _hadoop(spark, root)
-    dirs = [(hp, "")]
+    dirs = [(hp, "")] if fs.exists(hp) else []
     while dirs:
         d, rel = dirs.pop()
         for st in fs.listStatus(d):

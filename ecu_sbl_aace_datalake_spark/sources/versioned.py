@@ -11,15 +11,13 @@ tree:
 
 - each write lands in a NEW immutable directory ``_v{n}/`` (never
   rewritten, so concurrent readers of older versions are safe);
-- ``_manifest.json`` is the single mutable pointer: replacing it is the
-  commit. It is read and replaced through the Hadoop FileSystem of the
-  table's URI (``io._read_json`` / ``io._write_json``: a temp file, then
-  ``FileContext.rename`` with ``OVERWRITE``), so any driver on any storage
-  resolves the same history. A reader never sees a partial manifest. The
-  replace is atomic only where the file system renames over a file itself
-  (HDFS): Hadoop's default, which the local FS takes, deletes the old
-  manifest and then renames, so a reader between the two finds no table,
-  and a crash between them loses the pointer;
+- the manifest (the list of versions) is a JSON log, ``_manifest/``, whose
+  newest entry is the table: committing a version writes the next entry
+  (``io._log_commit``) and never overwrites a file, so a reader sees the
+  old or the new manifest and a crash leaves the old one. It is kept in
+  the lake through the Hadoop FileSystem of the table's URI, so any driver
+  resolves the same history. A table from before the log keeps its
+  ``_manifest.json`` until its next commit. One writer per table;
 - reads resolve the manifest (optionally pinned to a version or a
   timestamp) and scan only that version's directory;
 - ``vacuum`` drops versions beyond a retention count, exactly like
@@ -27,9 +25,9 @@ tree:
 
 At 100 TB the cost profile matches Delta-without-compaction: a write
 costs one full snapshot (use the incremental operators for deltas); a
-read costs one tiny JSON fetch + one pruned directory scan. The manifest
-stays O(versions), never O(files) — file listing is delegated to the
-parquet reader per version directory.
+read costs a listing of at most a few log entries, one tiny JSON fetch and
+one pruned directory scan. The manifest stays O(versions), never O(files)
+— file listing is delegated to the parquet reader per version directory.
 """
 
 from __future__ import annotations
@@ -40,18 +38,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Lakehouse, table_path
-from .io import DEFAULT_FORMAT, _as_list, _read_json, _remove, _write_json, read_path
+from .io import DEFAULT_FORMAT, _as_list, _log_commit, _log_head, _remove, read_path
 
-MANIFEST = "_manifest.json"
-
-
-def _read_manifest(spark: SparkSession, root: str) -> dict | None:
-    return _read_json(spark, f"{root}/{MANIFEST}")
-
-
-def _write_manifest(spark: SparkSession, root: str, manifest: dict) -> None:
-    # the pointer swap is the commit
-    _write_json(spark, f"{root}/{MANIFEST}", manifest)
+MANIFEST = "_manifest"
 
 
 def write_table_versioned(
@@ -67,7 +56,8 @@ def write_table_versioned(
     pass it explicitly for reproducible histories in tests."""
     spark = df.sparkSession
     root = table_path(lakehouse, table_name)
-    manifest = _read_manifest(spark, root) or {
+    head, manifest = _log_head(spark, f"{root}/{MANIFEST}")
+    manifest = manifest or {
         "table": table_name,
         "format": fmt,
         "versions": [],
@@ -88,7 +78,7 @@ def write_table_versioned(
         "columns": list(df.columns),
     }
     manifest["versions"].append(entry)
-    _write_manifest(spark, root, manifest)
+    _log_commit(spark, f"{root}/{MANIFEST}", head + 1, manifest)
     return {"table": table_name, "path": vdir, **entry}
 
 
@@ -104,7 +94,7 @@ def read_table_versioned(
     version, ``timestamp=`` resolves the newest version committed at or
     before that time (Delta's ``versionAsOf`` / ``timestampAsOf``)."""
     root = table_path(lakehouse, table_name)
-    manifest = _read_manifest(spark, root)
+    _head, manifest = _log_head(spark, f"{root}/{MANIFEST}")
     if manifest is None or not manifest["versions"]:
         raise FileNotFoundError(f"no versioned table at {root}")
     if version is not None and timestamp is not None:
@@ -135,7 +125,8 @@ def table_history(
     spark: SparkSession, lakehouse: Lakehouse, table_name: str
 ) -> list[dict]:
     """The commit log (oldest first) — Delta's ``DESCRIBE HISTORY``."""
-    manifest = _read_manifest(spark, table_path(lakehouse, table_name))
+    root = table_path(lakehouse, table_name)
+    _head, manifest = _log_head(spark, f"{root}/{MANIFEST}")
     return list(manifest["versions"]) if manifest else []
 
 
@@ -149,7 +140,7 @@ def vacuum_table(
     entries). Returns the dropped version numbers. The manifest commit
     happens FIRST so a reader can never resolve a deleted directory."""
     root = table_path(lakehouse, table_name)
-    manifest = _read_manifest(spark, root)
+    head, manifest = _log_head(spark, f"{root}/{MANIFEST}")
     if manifest is None:
         return []
     entries = manifest["versions"]
@@ -157,7 +148,7 @@ def vacuum_table(
         return []
     drop, keep = entries[:-keep_last], entries[-keep_last:]
     manifest["versions"] = keep
-    _write_manifest(spark, root, manifest)
+    _log_commit(spark, f"{root}/{MANIFEST}", head + 1, manifest)
     for e in drop:
         _remove(spark, f"{root}/{e['dir']}")
     return [e["version"] for e in drop]

@@ -41,3 +41,29 @@ def viewfs_lakehouse(spark, tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     yield Lakehouse("viewfs", f"viewfs://{name}{link}"), target
     conf.unset(key)
+
+
+@pytest.fixture
+def crash_renames(monkeypatch):
+    """Call it to make every Hadoop FileSystem rename in ``sources.io``
+    raise, as a driver killed just before that rename would;
+    ``monkeypatch.undo()`` ends it."""
+    from ecu_sbl_aace_datalake_spark.sources import io
+
+    hadoop = io._hadoop
+
+    class CrashOnRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, *_args):
+            raise OSError("interrupted before the rename")
+
+    def crashing_hadoop(spark, path):
+        fs, hp = hadoop(spark, path)
+        return CrashOnRename(fs), hp
+
+    return lambda: monkeypatch.setattr(io, "_hadoop", crashing_hadoop)

@@ -106,7 +106,7 @@ class TestIncrementalAppend:
             [(d, datetime.datetime(2024, 1, d)) for d in (1, 2, 3)], "id long, ts timestamp"
         )
         assert incremental_append(spark, lh, "ev", src, "ts")["appended"] == 3
-        assert (target / "Tables" / "ev__meta" / "watermark.json").is_file()
+        assert (target / "Tables" / "ev__meta" / "watermark" / f"{0:020}.json").is_file()
         elsewhere = tmp_path / "elsewhere"
         elsewhere.mkdir()
         monkeypatch.chdir(elsewhere)
@@ -150,6 +150,48 @@ class TestIncrementalAppend:
         }
         back = read_path(spark, f"{lh.tables_path}/ev", "parquet")
         assert sorted(r.id for r in back.collect()) == [1, 2, 3, 4, 5]
+
+
+    def test_interrupted_watermark_commit_keeps_the_old_watermark(
+        self, spark, tmp_path, monkeypatch, crash_renames
+    ):
+        """An append that dies before its watermark commit leaves the old
+        watermark, never none: the next call appends that batch again, not
+        the whole source."""
+        lh = Lakehouse("w", str(tmp_path))
+        schema = "id long, ts timestamp"
+        first = spark.createDataFrame(
+            [(d, datetime.datetime(2024, 1, d)) for d in (1, 2, 3)], schema
+        )
+        later = spark.createDataFrame(
+            [(d, datetime.datetime(2024, 1, d)) for d in (1, 2, 3, 4, 5)], schema
+        )
+        incremental_append(spark, lh, "ev", first, "ts")
+        crash_renames()
+        with pytest.raises(OSError, match="interrupted"):
+            incremental_append(spark, lh, "ev", later, "ts")
+        monkeypatch.undo()
+        assert get_watermark(lh, "ev") == "2024-01-03 00:00:00"
+        assert incremental_append(spark, lh, "ev", later, "ts") == {
+            "appended": 2, "watermark": "2024-01-05 00:00:00"
+        }
+
+    def test_reads_a_watermark_from_before_the_log(self, spark, tmp_path):
+        """A table whose watermark an earlier version kept in one
+        ``watermark.json`` appends only the rows beyond it."""
+        import json
+
+        lh = Lakehouse("w", str(tmp_path))
+        meta = tmp_path / "Tables" / "ev__meta"
+        meta.mkdir(parents=True)
+        (meta / "watermark.json").write_text(json.dumps({"watermark": "2024-01-03 00:00:00"}))
+        src = spark.createDataFrame(
+            [(d, datetime.datetime(2024, 1, d)) for d in (1, 2, 3, 4)], "id long, ts timestamp"
+        )
+        assert incremental_append(spark, lh, "ev", src, "ts") == {
+            "appended": 1, "watermark": "2024-01-04 00:00:00"
+        }
+        assert get_watermark(lh, "ev") == "2024-01-04 00:00:00"
 
 
 class TestDeleteRows:

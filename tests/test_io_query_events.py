@@ -97,6 +97,10 @@ class TestIO:
         )
         assert out.first().n == nation.where("n_regionkey = 0").count()
 
+    def test_file_stats_of_a_missing_table(self, spark, tmp_path):
+        lh = Lakehouse("v", str(tmp_path))
+        assert lio.table_file_stats(spark, lh, "nope") == {"n_files": 0, "total_bytes": 0}
+
 
 class TestEvents:
     @pytest.fixture(scope="class")
@@ -417,33 +421,16 @@ class TestVacuumOrphans:
         assert len(removed) == 3
         assert sorted(os.listdir(lh.tables_path)) == ["nation"]
 
-    def test_removes_what_interrupted_rewrites_leave(self, spark, sf_dir, tmp_path, monkeypatch):
+    def test_removes_what_interrupted_rewrites_leave(
+        self, spark, sf_dir, tmp_path, monkeypatch, crash_renames
+    ):
         """A rewrite that dies before its swap leaves its staging dir; so
         may a Z-order rewrite of an earlier version (``__zorder_``)."""
         import os
 
         lh = Lakehouse("v", str(tmp_path))
         lio.write_table(lh, "nation", lio.load_table(spark, sf_dir, "nation"))
-        hadoop = lio._hadoop
-
-        class CrashOnRename:
-            """A Hadoop FileSystem whose renames die, as a driver killed
-            before the swap would."""
-
-            def __init__(self, fs):
-                self._fs = fs
-
-            def __getattr__(self, name):
-                return getattr(self._fs, name)
-
-            def rename(self, *_args):
-                raise OSError("interrupted before the swap")
-
-        def crashing_hadoop(spark, path):
-            fs, hp = hadoop(spark, path)
-            return CrashOnRename(fs), hp
-
-        monkeypatch.setattr(lio, "_hadoop", crashing_hadoop)
+        crash_renames()
         with pytest.raises(OSError, match="interrupted"):
             lio.compact_table(spark, lh, "nation")
         monkeypatch.undo()
@@ -733,6 +720,76 @@ class TestVersionedTables:
         assert V.vacuum_table(spark, lh, "nation", keep_last=2) == [0]
         assert not (table / "_v0").exists()
         assert (table / "_v1").is_dir() and (table / "_v2").is_dir()
+
+    def test_interrupted_commit_keeps_history(
+        self, spark, sf_dir, tmp_path, monkeypatch, crash_renames
+    ):
+        """A write that dies before its manifest commit leaves the last
+        committed manifest in place: readers still see it, and the next
+        write takes the uncommitted version number again instead of
+        restarting at version 0."""
+        from ecu_sbl_aace_datalake_spark.sources import versioned as V
+
+        lh = Lakehouse("v", str(tmp_path))
+        nation = lio.load_table(spark, sf_dir, "nation")
+        V.write_table_versioned(lh, "nation", nation.limit(1), commit_ts=1.0)
+        V.write_table_versioned(lh, "nation", nation.limit(2), commit_ts=2.0)
+        crash_renames()
+        with pytest.raises(OSError, match="interrupted"):
+            V.write_table_versioned(lh, "nation", nation.limit(3), commit_ts=3.0)
+        monkeypatch.undo()
+        assert [h["version"] for h in V.table_history(spark, lh, "nation")] == [0, 1]
+        assert V.read_table_versioned(spark, lh, "nation").count() == 2
+        assert V.write_table_versioned(lh, "nation", nation.limit(4), commit_ts=4.0)["version"] == 2
+        assert [h["ts"] for h in V.table_history(spark, lh, "nation")] == [1.0, 2.0, 4.0]
+        assert [
+            V.read_table_versioned(spark, lh, "nation", version=v).count() for v in (0, 1, 2)
+        ] == [1, 2, 4]
+
+    def test_manifest_log_keeps_two_entries_and_refuses_a_second_commit(
+        self, spark, sf_dir, tmp_path
+    ):
+        """Each commit adds a manifest entry under a fresh name and drops
+        the one two before it; committing an entry that exists fails and
+        leaves the log as it was."""
+        from ecu_sbl_aace_datalake_spark.sources import versioned as V
+
+        lh = Lakehouse("v", str(tmp_path))
+        nation = lio.load_table(spark, sf_dir, "nation")
+        for ts in (1.0, 2.0, 3.0, 4.0):
+            V.write_table_versioned(lh, "nation", nation, commit_ts=ts)
+        log = tmp_path / "Tables" / "nation" / "_manifest"
+
+        def entries():
+            return sorted(p.name for p in log.iterdir() if not p.name.startswith("."))
+
+        assert entries() == [f"{n:020}.json" for n in (2, 3)]
+        with pytest.raises(OSError, match="another writer"):
+            lio._log_commit(spark, str(log), 3, {"versions": []})
+        assert entries() == [f"{n:020}.json" for n in (2, 3)]
+        assert [h["version"] for h in V.table_history(spark, lh, "nation")] == [0, 1, 2, 3]
+
+    def test_reads_a_manifest_from_before_the_log(self, spark, sf_dir, tmp_path):
+        """A table whose manifest an earlier version kept in one
+        ``_manifest.json`` keeps its history: the next write is version 1,
+        not a second version 0 over the first."""
+        import json
+
+        from ecu_sbl_aace_datalake_spark.sources import versioned as V
+
+        lh = Lakehouse("v", str(tmp_path))
+        nation = lio.load_table(spark, sf_dir, "nation")
+        root = tmp_path / "Tables" / "nation"
+        nation.write.parquet(str(root / "_v0"))
+        entry = {"version": 0, "dir": "_v0", "ts": 1.0, "partition_by": None,
+                 "columns": nation.columns}
+        (root / "_manifest.json").write_text(
+            json.dumps({"table": "nation", "format": "parquet", "versions": [entry]})
+        )
+        assert V.write_table_versioned(lh, "nation", nation.limit(1), commit_ts=2.0)["version"] == 1
+        assert [h["version"] for h in V.table_history(spark, lh, "nation")] == [0, 1]
+        assert V.read_table_versioned(spark, lh, "nation", version=0).count() == 25
+        assert V.read_table_versioned(spark, lh, "nation").count() == 1
 
     def test_errors(self, spark, sf_dir):
         import pytest
